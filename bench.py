@@ -138,19 +138,16 @@ def run_replay(staging: str, cores: int, batches: int = 1) -> dict:
     )
     table.append(seed)
     # A/B hook for the winner-join strategy (tools/ab_winner_join.py): the
-    # auto-switch threshold is SET from interleaved forced-variant samples on
-    # this exact input shape, so the worker must be forceable per-run.
-    force = os.environ.get("SPARK_GRAFT_FORCE_WINNER_JOIN", "")
-    bw = {"broadcast": True, "shuffle": False}.get(force)
-    eng = ReplayEngine(
-        spark,
-        table,
-        ReplayConfig(
-            events_per_batch=max(1, n_events // batches),
-            parse_payload=True,
-            broadcast_winners=bw,
-        ),
+    # switch threshold is SET from interleaved forced-variant samples on
+    # this exact input shape, so the worker must be forceable per-run — a
+    # threshold of 0 forces the shuffle join, 2**62 the broadcast.
+    cfg = ReplayConfig(
+        events_per_batch=max(1, n_events // batches), parse_payload=True
     )
+    force = os.environ.get("SPARK_GRAFT_FORCE_WINNER_JOIN", "")
+    if force in ("broadcast", "shuffle"):
+        cfg.broadcast_winners_max_keys = 2**62 if force == "broadcast" else 0
+    eng = ReplayEngine(spark, table, cfg)
     t0 = time.time()
     reports = eng.replay(log, run_id="bench", bounds=bounds)
     dt = time.time() - t0
@@ -163,7 +160,7 @@ def run_replay(staging: str, cores: int, batches: int = 1) -> dict:
         "final_rows": rows,
         "phases": [r.phases for r in reports],
         "batch_seconds": [round(r.seconds, 2) for r in reports],
-        "winner_join": getattr(eng, "_last_winner_join", None),
+        "winner_join": reports[-1].winner_join if reports else None,
     }
 
 

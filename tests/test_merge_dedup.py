@@ -1,3 +1,4 @@
+import pytest
 from pyspark.sql import functions as F
 
 from tg_data_connector_spark.cdc.dedup import lww_dedup, lww_dedup_salted
@@ -131,7 +132,7 @@ def test_winner_filter_both_variants(spark):
         rows, "doc_id string, commit_lsn long, seq_no long, v string"
     )
     for bcast in (True, False):
-        kept = winner_filter(df, "doc_id", broadcast_winners=bcast)
+        kept = winner_filter(df, "doc_id", broadcast=bcast)
         got = sorted((r["doc_id"], r["commit_lsn"], r["seq_no"], r["v"])
                      for r in kept.collect())
         assert got == [("k1", 5, 3, "b"), ("k2", 7, 0, "d"), ("k2", 7, 0, "d"),
@@ -164,71 +165,115 @@ def test_version_pack_fast_path_matches_decimal(spark):
     assert t.startswith("decimal")
 
 
-def test_replay_winner_shuffle_variant_e2e(spark, tmp_table_root):
-    """Full replay equivalence with broadcast_winners=False (the all-shuffle
-    scaling shape)."""
+def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
+    """Full replay equivalence for the engine's non-default dedup paths: the
+    all-shuffle winner join (threshold 0, the scaling shape) and the salted
+    two-phase dedup (dedup_strategy="salted"). Any other strategy is
+    rejected up front."""
     from tg_data_connector_spark.cdc import ReplayConfig, ReplayEngine
     from tg_data_connector_spark.cdc.genlog import (
         gen_changelog,
         gen_seed_sequences,
         with_binary_payload,
     )
-    from tg_data_connector_spark.lake import LakeTable, TableSchema
     from oracle import oracle_final_state
 
     n, d = 8_000, 600
     log_t = gen_changelog(spark, n, d, n_parts=4)
     log = with_binary_payload(log_t).drop("tokens")
     seed = gen_seed_sequences(spark, d)
-    table = LakeTable.create(
-        spark, tmp_table_root,
-        TableSchema([("doc_id", "string"), ("tokens", "array<int>"),
-                     ("n_tok", "int"), ("source", "string")]),
-        key="doc_id", n_buckets=8,
-    )
-    table.append(seed)
-    eng = ReplayEngine(
-        spark, table,
-        ReplayConfig(events_per_batch=3_000, parse_payload=True,
-                     broadcast_winners=False),
-    )
-    eng.replay(log, run_id="shufv")
-    final = table.read().select("doc_id", "tokens", "n_tok", "source")
     exp = oracle_final_state(seed, log_t).select(
         "doc_id", "tokens", "n_tok", "source"
     )
-    assert final.exceptAll(exp).count() == 0
-    assert exp.exceptAll(final).count() == 0
+    for tag, cfg in (
+        ("shuffle", ReplayConfig(events_per_batch=3_000, parse_payload=True,
+                                 broadcast_winners_max_keys=0)),
+        ("salted", ReplayConfig(events_per_batch=3_000, parse_payload=True,
+                                dedup_strategy="salted", salt_buckets=4)),
+    ):
+        table = LakeTable.create(
+            spark, str(tmp_path / tag), SCHEMA, key="doc_id", n_buckets=8
+        )
+        table.append(seed)
+        reports = ReplayEngine(spark, table, cfg).replay(log, run_id=tag)
+        joins = {r.winner_join.get("join") for r in reports}
+        assert joins == ({"shuffle"} if tag == "shuffle" else {None}), tag
+        final = table.read().select("doc_id", "tokens", "n_tok", "source")
+        assert final.exceptAll(exp).count() == 0, tag
+        assert exp.exceptAll(final).count() == 0, tag
+    with pytest.raises(ValueError, match="dedup_strategy"):
+        ReplayEngine(spark, table, ReplayConfig(dedup_strategy="arrow"))
 
 
 def test_winner_join_auto_switch_by_batch_shape(spark, tmp_path):
-    """broadcast_winners=None (auto): the engine picks broadcast vs shuffled-
-    hash winner join from the prepass's distinct-key estimate ALONE — no
-    manual flag — and both shapes produce the oracle state."""
+    """The winner join broadcasts only when the winner count is KNOWN to be
+    within broadcast_winners_max_keys. A batch of at most that many events
+    broadcasts on the event bound alone, with no count job; a larger batch
+    counts its persisted winner aggregate exactly, joins that same frame and
+    releases it after the merge. Pinned on one log whose single batch has
+    K winners: threshold >= events, threshold = K and threshold = K - 1.
+    Every shape matches the oracle, also after a second replay on the same
+    engine and a replay by a fresh engine on the same table."""
     from tg_data_connector_spark.cdc import ReplayConfig, ReplayEngine
     from tg_data_connector_spark.cdc.genlog import gen_changelog, gen_seed_sequences
     from oracle import oracle_final_state
 
     n, d = 4_000, 500
     log = gen_changelog(spark, n, d, n_parts=4)
+    ev = log.count()  # n plus the generator's duplicate deliveries
     seed = gen_seed_sequences(spark, d)
-    for max_keys, expect in ((10_000_000, "broadcast"), (50, "shuffle")):
-        root = str(tmp_path / f"tbl_{expect}")
-        table = LakeTable.create(spark, root, SCHEMA, key="doc_id", n_buckets=8)
-        table.append(seed)
-        eng = ReplayEngine(
-            spark, table,
-            ReplayConfig(events_per_batch=n, broadcast_winners=None,
-                         broadcast_winners_max_keys=max_keys),
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def run(limit, tag):
+        table = LakeTable.create(
+            spark, str(tmp_path / tag), SCHEMA, key="doc_id", n_buckets=8
         )
-        eng.replay(log, run_id=f"auto_{expect}")
-        assert eng._last_winner_join == expect, (max_keys, expect)
+        table.append(seed)
+        cfg = ReplayConfig(events_per_batch=10**9, broadcast_winners_max_keys=limit)
+        eng = ReplayEngine(spark, table, cfg)
+        [rep] = eng.replay(log, run_id=tag)
+        assert cache.isEmpty(), tag  # the counted aggregate was released
+        return rep, eng, table, cfg
+
+    def assert_oracle(table, events):
         final = table.read().select("doc_id", "tokens", "n_tok", "source")
-        exp = oracle_final_state(seed, log).select(
+        exp = oracle_final_state(seed, events).select(
             "doc_id", "tokens", "n_tok", "source"
         )
         assert final.exceptAll(exp).count() == 0
         assert exp.exceptAll(final).count() == 0
+
+    rep, _, table, _ = run(ev, "bound")
+    k = rep.deduped_keys
+    assert rep.events == ev and 0 < k < ev
+    assert rep.winner_join == {"join": "broadcast", "basis": "events", "n": ev}
+    assert "winner_count" not in rep.phases  # no extra job
+    assert_oracle(table, log)
+
+    rep, _, table, _ = run(k, "exact")
+    assert rep.winner_join == {"join": "broadcast", "basis": "winners", "n": k}
+    assert "winner_count" in rep.phases
+    assert_oracle(table, log)
+
+    rep, eng, table, cfg = run(k - 1, "over")
+    assert rep.winner_join == {"join": "shuffle", "basis": "winners", "n": k}
+    assert rep.deduped_keys == k
+    assert_oracle(table, log)
+
+    def later(seed_, shift):
+        return (
+            gen_changelog(spark, n, d, n_parts=4, seed=seed_)
+            .withColumn("offset", F.col("offset") + shift * 1_000_000)
+            .withColumn("commit_lsn", F.col("commit_lsn") + shift * 10_000_000)
+        )
+
+    log2, log3 = later(11, 1), later(12, 2)
+    [rep2] = eng.replay(log2, run_id="over2")  # same engine, later offsets
+    assert rep2.winner_join["basis"] == "winners"
+    [rep3] = ReplayEngine(spark, table, cfg).replay(log3, run_id="over3")
+    assert rep3.winner_join["basis"] == "winners"
+    assert cache.isEmpty()
+    assert_oracle(table, log.unionByName(log2).unionByName(log3))
 
 
 def test_winner_filter_plan_shape(spark):
@@ -240,7 +285,7 @@ def test_winner_filter_plan_shape(spark):
         [("k%d" % i, i, 0, "v") for i in range(100)],
         "doc_id string, commit_lsn long, seq_no long, v string",
     )
-    plan_b = winner_filter(df, "doc_id", broadcast_winners=True)._jdf.queryExecution().executedPlan().toString()
-    plan_s = winner_filter(df, "doc_id", broadcast_winners=False)._jdf.queryExecution().executedPlan().toString()
+    plan_b = winner_filter(df, "doc_id", broadcast=True)._jdf.queryExecution().executedPlan().toString()
+    plan_s = winner_filter(df, "doc_id", broadcast=False)._jdf.queryExecution().executedPlan().toString()
     assert "Broadcast" in plan_b
     assert "Broadcast" not in plan_s

@@ -300,3 +300,31 @@ def test_assemble_bins_bounded_streams_round_trip(spark):
             )
             exp = [v for off, d, take in docs for v in toks[(r["source"], d)][:take]]
             assert r["tokens"] == exp and r["n_tok"] == len(exp)
+
+
+def test_pack_bins_part_value_missing_from_counts(spark, tmp_path):
+    """A part value the driver-side per-source counts never saw (an upstream
+    that changed between pack_bins' count and the pack itself) packs as one
+    stream of its own instead of failing on a NULL stream id."""
+    import os
+
+    from tg_data_connector_spark.operators.packing import pack_bins
+
+    flag = str(tmp_path / "late")
+
+    def source(doc_id):
+        return "late" if doc_id < 3 and os.path.exists(flag) else "a"
+
+    src = F.udf(source, "string").asNondeterministic()
+    df = spark.range(12).select(
+        src(F.col("id")).alias("source"),
+        F.col("id").cast("int").alias("doc_id"),
+        F.lit(30).alias("n_tok"),
+    )
+    asg = pack_bins(df, window=64, max_docs_per_stream=4)  # saw {"a": 12}
+    open(flag, "w").close()
+    got = sorted(tuple(r) for r in asg.collect())
+    rows = [("late" if i < 3 else "a", i, 30) for i in range(12)]
+    _check_bins_valid(got, rows, 64)
+    late = [(b, d, off) for s, b, d, off, _, _ in got if s == "late"]
+    assert late == [(0, 0, 0), (0, 1, 30), (1, 2, 0)]  # one greedy stream

@@ -60,9 +60,7 @@ def test_replay_single_batch_same_result(spark, tmp_table_root):
     """Batching must not change the final state (LWW associativity)."""
     t, seed = _setup(spark, tmp_table_root)
     log = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    eng = ReplayEngine(
-        spark, t, ReplayConfig(events_per_batch=10**9, salted_dedup=False)
-    )
+    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=10**9))
     eng.replay(log, run_id="r1")
     _assert_equiv(t.read(), oracle_final_state(seed, log))
 
@@ -242,31 +240,6 @@ def test_replay_into_uri_rooted_table(spark, tmp_path):
     assert len(fs.listdir(f"{root}/_manifests")) > 0
 
 
-def test_winner_key_estimate_exact_union(spark, tmp_table_root):
-    """The auto-switch's batch-global key estimate must be the UNION count
-    across source partitions, not a per-part sum: keys span parts (doc_id is
-    unrelated to part), so a sum overcounts ~(events/keys)x and silently
-    forces the wrong winner-join variant. The round-4 prepass unions
-    mergeable HLL sketches (replay.py) — assert its estimate lands within
-    the sketch's error band of the true distinct count."""
-    t, _ = _setup(spark, tmp_table_root)
-    log = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=N_EVENTS * 2))
-    eng.replay(log, run_id="est")
-    true_keys = log.select("doc_id").distinct().count()
-    est = eng._est_keys
-    assert est is not None
-    assert abs(est - true_keys) / true_keys < 0.05  # HLL rsd ~2%
-    # sanity: a per-part sum would be far outside that band on this log
-    per_part_sum = (
-        log.groupBy("part")
-        .agg(F.approx_count_distinct("doc_id").alias("k"))
-        .agg(F.sum("k"))
-        .collect()[0][0]
-    )
-    assert per_part_sum > true_keys * 1.5
-
-
 def test_rename_lag_events_map_to_new_column(spark, tmp_table_root):
     """Mid-replay rename_column with an upstream that LAGS the rename: the
     change events keep carrying the old field name (`source`), and the
@@ -348,86 +321,3 @@ def test_requeue_quarantine_dead_letter(spark, tmp_table_root, tmp_path):
     rep3 = requeue_quarantine(spark, t, qdir, run_id="rq2")
     assert rep3.dirty == n_dirty  # every row still dirty, all counted
     _assert_equiv(t.read(), oracle_final_state(seed, fixed_log))
-
-
-def test_key_ratio_cache_skips_sketch_and_stays_correct(spark, tmp_path):
-    """After one applied batch the engine knows the stream's keys-per-event
-    ratio EXACTLY (observe() winner count on the merge job) and later
-    prepasses skip the HLL sketch: the estimate comes from the cache, the
-    switch stays data-driven, and the replayed state still matches the
-    oracle."""
-    t, seed = _setup(spark, str(tmp_path / "t"))
-    log1 = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=N_EVENTS * 2))
-    eng.replay(log1, run_id="r1")
-    assert eng._key_ratio is not None
-    # the learned ratio is the CLEAN winner count per event: at most the
-    # log's distinct keys (dirty-quarantined keys drop out), and near it
-    true_keys = log1.select("doc_id").distinct().count()
-    assert 0.85 <= (eng._key_ratio * N_EVENTS) / true_keys <= 1.0
-    # second replay: same engine, new offsets — prepass must use the cache
-    log2 = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS).withColumn(
-        "offset", F.col("offset") + N_EVENTS
-    ).withColumn("commit_lsn", F.col("commit_lsn") + F.lit(10_000_000))
-    eng.replay(log2, run_id="r2")
-    assert eng._est_from_cache is True
-    assert eng._est_keys is not None and eng._est_keys > 0
-    _assert_equiv(
-        t.read(),
-        oracle_final_state(
-            oracle_final_state(seed, log1).select(
-                "doc_id", "tokens", "n_tok", "source"
-            ),
-            log2,
-        ),
-    )
-
-
-def test_key_ratio_cache_drift_invalidates(spark, tmp_path):
-    """A cached ratio that mispredicts the winner set by >2x is dropped so
-    the next prepass re-measures instead of compounding the error."""
-    t, _ = _setup(spark, str(tmp_path / "t"))
-    log = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=N_EVENTS * 2))
-    eng._key_ratio = 0.001  # pretend a past stream was ~all-duplicate
-    eng.replay(log, run_id="drift")
-    assert eng._key_ratio is None  # predicted ~4 keys, actual ~600 -> drop
-
-
-def test_sketch_estimate_first_replay_not_cached(spark, tmp_path):
-    """The first replay on a fresh engine has no ratio cache: the estimate
-    must come from the exact-union HLL sketch and land within its error
-    band of the true distinct count."""
-    t, _ = _setup(spark, str(tmp_path / "t"))
-    log = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=N_EVENTS * 2))
-    eng.replay(log, run_id="first")
-    true_keys = log.select("doc_id").distinct().count()
-    assert eng._est_from_cache is False
-    assert abs(eng._est_keys - true_keys) / true_keys < 0.05
-
-
-def test_key_ratio_restored_by_fresh_engine_from_snapshot(spark, tmp_path):
-    """The last replay commit records its exact winner/event counts in the
-    snapshot metrics; a FRESH engine on the same table restores the ratio
-    and its first prepass is already sketch-free (cache-sourced estimate)."""
-    t, seed = _setup(spark, str(tmp_path / "t"))
-    log1 = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
-    cfg = ReplayConfig(events_per_batch=N_EVENTS * 2)
-    ReplayEngine(spark, t, cfg).replay(log1, run_id="r1")
-    eng2 = ReplayEngine(spark, t, cfg)  # new process analog
-    assert eng2._key_ratio is None
-    log2 = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS).withColumn(
-        "offset", F.col("offset") + N_EVENTS
-    ).withColumn("commit_lsn", F.col("commit_lsn") + F.lit(10_000_000))
-    eng2.replay(log2, run_id="r2")
-    assert eng2._est_from_cache is True
-    _assert_equiv(
-        t.read(),
-        oracle_final_state(
-            oracle_final_state(seed, log1).select(
-                "doc_id", "tokens", "n_tok", "source"
-            ),
-            log2,
-        ),
-    )

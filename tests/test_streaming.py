@@ -238,31 +238,3 @@ def test_stream_dedup_ingest_index_and_keepset_stable(spark, tmp_path):
         if str(r["doc_id"]) == r["canonical_id"]
     )
     assert keep1 == keep2  # keep-set stable; only status labels degrade
-
-
-def test_stream_mor_learns_key_ratio_without_observe(spark, tmp_path):
-    """Streaming disables Observation (listener deadlock), but a MoR
-    micro-batch's delta commit carries exact row counts: the engine must
-    still learn the keys-per-event ratio from them so later micro-batches
-    (and the next engine on this table) skip the prepass sketch."""
-    log = gen_changelog(spark, 2000, 300, n_parts=4)
-    src_dir = str(tmp_path / "log")
-    log.repartition(6).write.parquet(src_dir)
-    seed = gen_seed_sequences(spark, 200)
-    table = LakeTable.create(spark, str(tmp_path / "tbl"), SCHEMA, "doc_id", 8)
-    table.append(seed)
-    eng = ReplayEngine(spark, table, ReplayConfig(merge_mode="mor"))
-    q = stream_replay(
-        spark, eng, src_dir, str(tmp_path / "ckpt"), max_files_per_trigger=2
-    )
-    q.awaitTermination(300)
-    assert eng._key_ratio is not None and 0 < eng._key_ratio <= 1
-    # the ratio is per-batch keys/event (micro-batch sized — a 2-file batch
-    # saturates fewer dups per key than a bulk batch; the >2x drift guard
-    # covers cross-size application). A follow-up batch on the same engine
-    # must run sketch-free off the cache:
-    extra = gen_changelog(spark, 500, 300, n_parts=4).withColumn(
-        "offset", F.col("offset") + 2000
-    ).withColumn("commit_lsn", F.col("commit_lsn") + F.lit(10_000_000))
-    eng.apply_batch(extra, batch_id="post_stream")
-    assert eng._est_from_cache is True

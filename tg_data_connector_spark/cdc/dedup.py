@@ -6,18 +6,24 @@ on the destination DB resolving duplicate keys row-by-row in arrival order
 must be reduced to the single newest event per key *before* the join — Iceberg's
 MERGE has the same one-source-row-per-key cardinality rule.
 
-Two physical strategies, same semantics:
+Three physical strategies, same semantics:
 
+  * ``winner_filter``   — the replay engine's default: a narrow hash-aggregate
+    of each key's max packed version joins back to the batch and prunes the
+    losers before any payload-wide shuffle (``winner_versions`` builds the
+    aggregate; the engine picks the broadcast or shuffled-hash join).
   * ``lww_dedup``       — single ``groupBy(key).agg(max_by(payload, version))``:
     one shuffle, map-side partial aggregation for free (Spark plans
-    ``partial_max_by -> exchange -> final_max_by``).
+    ``partial_max_by -> exchange -> final_max_by``). Used by ``lake/sync.py``
+    and the dedup gates.
   * ``lww_dedup_salted``— explicit two-phase for pathologically hot keys: first
     ``groupBy(key, salt)`` (salt = hash of the version pair, so a hot key's
     events spread over S reducers), then ``groupBy(key)`` over the S partials.
-    This is the north rule's "explicit salting of hot sources".
+    This is the north rule's "explicit salting of hot sources"
+    (``ReplayConfig(dedup_strategy="salted")``).
 
-Which to use (measured, see BENCH notes in BASELINE.md): the PLAIN version is
-the default. ``max_by`` is an algebraic aggregate, so Spark always plans
+Salting vs plain ``max_by`` (measured, see BENCH notes in BASELINE.md):
+``max_by`` is an algebraic aggregate, so Spark always plans
 ``partial_max_by -> exchange -> final_max_by``: a key receiving millions of
 updates collapses to ONE partial row per map task before the shuffle — the
 reducer for a hot key sees at most |map tasks| rows, not |events|. Salting on
@@ -36,10 +42,6 @@ construction — max_by of equal versions returns one of identical payloads.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -80,119 +82,57 @@ def version_pack(lsn_max: int | None = None, seq_max: int | None = None):
     return F.col("commit_lsn").cast("decimal(38,0)") * mult + F.col("seq_no")
 
 
+def winner_versions(
+    df: DataFrame,
+    key: str = "doc_id",
+    lsn_max: int | None = None,
+    seq_max: int | None = None,
+) -> DataFrame:
+    """Each key's winning packed version, as ``(key, _vmax)`` rows: one
+    narrow hash-aggregate over (key, lsn, seq) — column pruning keeps the
+    payload out of its scan. ``lsn_max``/``seq_max`` pick the packing (see
+    ``version_pack``) and must match the ``winner_filter`` call."""
+    return df.groupBy(key).agg(
+        F.max(version_pack(lsn_max, seq_max)).alias("_vmax")
+    )
+
+
 def winner_filter(
     df: DataFrame,
     key: str = "doc_id",
-    broadcast_winners: bool = True,
+    broadcast: bool = True,
     lsn_max: int | None = None,
     seq_max: int | None = None,
-    winners_from: DataFrame | None = None,
+    winners: DataFrame | None = None,
 ):
     """Filter a change batch to the rows carrying their key's MAX version —
     entirely JVM-side, no Python, no payload-wide shuffle.
 
-    Plan shape: one narrow hash-aggregate over (key, lsn, seq) — column
-    pruning keeps the payload out of this scan — produces the per-key winning
-    version (~|keys| rows), which joins back against the batch as the SMALL
-    side (broadcast by default: winners:events is ~1:10 at CDC-typical update
-    ratios, and the broadcast prunes losers BEFORE any shuffle, shrinking the
-    downstream exchange by the same ratio; pass broadcast_winners=False for
-    pathologically wide batches to take a shuffled-hash join instead).
+    The ``winner_versions`` aggregate (~|keys| rows) joins back against the
+    batch as the SMALL side. ``broadcast=True`` ships it to every task, so
+    losers are pruned before ANY shuffle (winners:events is ~1:10 at
+    CDC-typical update ratios); ``broadcast=False`` takes a shuffled-hash join
+    instead, for winner sets too large to build on the driver. The replay
+    engine chooses between them from a known bound on the winner count
+    (``ReplayConfig.broadcast_winners_max_keys``).
+
+    ``winners``: the precomputed ``winner_versions`` of a logically identical
+    frame. Callers that filter an already-shuffled df pass the aggregate of
+    the pre-shuffle scan, so it runs off a column-pruned read instead of the
+    wide exchange; the engine also passes the persisted aggregate it counted.
 
     Output may retain exact duplicate DELIVERIES of the winning event (same
     key, same version, identical payload by contract) — callers collapse those
     with a cheap per-key dedup over this winners-only stream.
     """
-    pack = version_pack(lsn_max, seq_max)
-    # ``winners_from``: logically-identical upstream frame to aggregate from —
-    # callers that filter an already-shuffled df pass the pre-shuffle scan
-    # here so the agg runs off a column-pruned parquet read instead of
-    # re-reading the wide exchange
-    winners = (winners_from if winners_from is not None else df).groupBy(key).agg(
-        F.max(pack).alias("_vmax")
-    )
-    if broadcast_winners:
+    if winners is None:
+        winners = winner_versions(df, key, lsn_max, seq_max)
+    if broadcast:
         winners = F.broadcast(winners)
     else:
         winners = winners.hint("shuffle_hash")
+    pack = version_pack(lsn_max, seq_max)
     return df.join(winners, [key]).where(pack == F.col("_vmax")).drop("_vmax")
-
-
-def lww_dedup_arrow(
-    df: DataFrame, key: str = "doc_id", num_partitions: int | None = None
-) -> DataFrame:
-    """One explicit hash(key) shuffle + one Arrow-vectorized kernel pass.
-
-    Why this exists when ``lww_dedup`` already expresses the same thing: the
-    ``max_by(struct(payload...), struct(lsn, seq))`` aggregation buffer holds
-    var-width values (binary payload / token array), which disqualifies the
-    codegen'd HashAggregate — Spark falls back to **SortAggregate**, i.e. a
-    full sort of the payload-carrying batch on BOTH sides of the exchange
-    (measured: 448 CPU-s vs 65 for the scan at 5M events/batch). This variant
-    shuffles once on hash(key) — the north rule's explicit partitioning — and
-    replaces the sort-based aggregation with a per-partition vectorized kernel:
-    an int64 lexsort on the (commit_lsn, seq_no) columns (never the payload)
-    followed by a hash ``drop_duplicates(keep='last')``. O(n log n) on two
-    int columns instead of O(n log n) struct comparisons over full rows.
-
-    Partition = whole pandas frame in executor memory: size
-    ``spark.sql.shuffle.partitions`` so batch_rows/partitions fits (the same
-    rule the reference applies to its channel memory,
-    ``core/.../channel/memory/MemoryChannel.java:22-146``).
-
-    Ties (duplicate deliveries with equal (lsn, seq)) keep one arbitrary row
-    of identical payloads — same contract as max_by.
-
-    ``num_partitions``: pass the target table's bucket count to make the
-    output partitioning IDENTICAL to the lake bucket layout (bucket_expr ==
-    HashPartitioning — ``lake/table.py``): the downstream MERGE join and the
-    per-bucket file write then reuse this one shuffle.
-    """
-    schema = df.schema
-    vcols = [c for c in VERSION_COLS]
-
-    def reduce_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.lexsort(
-            tuple(pdf[c].to_numpy(dtype=np.int64) for c in reversed(vcols))
-        )
-        return pdf.iloc[order].drop_duplicates(subset=[key], keep="last")
-
-    # Streaming reduce: each Arrow chunk is reduced to its per-key winners on
-    # arrival and only winners accumulate, compacted whenever they exceed a
-    # bound. Peak memory is therefore ~max(|distinct keys in partition|,
-    # COMPACT_ROWS) + one chunk — NOT the whole shuffle partition (which grows
-    # as events_per_batch / n_buckets and would otherwise cap batch sizing).
-    # LWW is associative (max over the version pair per key), so chunked
-    # reduction is exact.
-    COMPACT_ROWS = 2_000_000
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        winners: list[pd.DataFrame] = []
-        total = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            w = reduce_chunk(pdf)
-            winners.append(w)
-            total += len(w)
-            if total > COMPACT_ROWS and len(winners) > 1:
-                merged = reduce_chunk(pd.concat(winners, ignore_index=True))
-                winners, total = [merged], len(merged)
-        if not winners:
-            return
-        out = (
-            reduce_chunk(pd.concat(winners, ignore_index=True))
-            if len(winners) > 1
-            else winners[0]
-        )
-        yield out
-
-    parted = (
-        df.repartition(num_partitions, F.col(key))
-        if num_partitions
-        else df.repartition(F.col(key))
-    )
-    return parted.mapInPandas(kernel, schema)
 
 
 def _payload_struct(df: DataFrame, key: str):

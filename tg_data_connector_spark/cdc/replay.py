@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..lake.evolve import apply_schema_change
 from ..lake.merge import merge_upsert
 from ..lake.table import LakeTable
-from .dedup import lww_dedup, lww_dedup_arrow, lww_dedup_salted, winner_filter
+from .dedup import lww_dedup_salted, winner_filter, winner_versions
 from .parse import parse_events
 from .quality import ErrorLimit
 
@@ -57,11 +57,6 @@ class ReplayConfig:
     #       and Python sees ONLY the decode of winners (measured: the old
     #       full-batch Arrow kernel put 16 Python workers next to 16 JVM lanes
     #       — 2x host oversubscription that collapsed 16-lane scaling).
-    #   "arrow"  — hash(doc_id) repartition of the FULL batch + vectorized
-    #       Arrow kernel (avoids the SortAggregate fallback that var-width
-    #       payloads force on max_by; use when winners ~ events so the winner
-    #       prefilter would not pay for itself)
-    #   "maxby"  — single groupBy().agg(max_by(...)) declarative aggregate
     #   "salted" — two-phase (key, salt) partial then key final; only for
     #       non-algebraic kernels where map-side partials can't absorb a hot
     #       key (see dedup.py module docstring)
@@ -100,17 +95,17 @@ class ReplayConfig:
     # bytes_per_batch / mean event payload size (measured on a bounded sample
     # at replay start). events_per_batch then acts as a floor of 1.
     bytes_per_batch: int | None = None
-    # winner strategy: broadcast the per-key winner versions (fastest wall
-    # clock — losers are pruned map-side before ANY shuffle, at the cost of a
-    # driver-side broadcast build that is FIXED time regardless of cluster
-    # width) vs shuffle-join them (every byte of work parallelizes — the
-    # better choice when winners-per-batch outgrow broadcast, and the purer
-    # scaling shape). None (default) = AUTO: the stats prepass already scans
-    # each batch, so it carries an approx_count_distinct(key) for free and the
-    # engine flips to the shuffled-hash variant when the estimated winner set
-    # exceeds ``broadcast_winners_max_keys``. True/False force one path.
-    broadcast_winners: bool | None = None
-    # auto-switch threshold: key-count at which a driver-built broadcast of
+    # winner strategy: the per-key winner versions join back to the batch
+    # either as a BROADCAST (losers pruned map-side before ANY shuffle, at the
+    # cost of a driver-side build that is FIXED time regardless of cluster
+    # width) or SHUFFLED-HASH (every byte of work parallelizes). The engine
+    # broadcasts only when the winner count is KNOWN to be <= this many keys:
+    # a batch of at most this many events (its prepass count) cannot have
+    # more winners; a larger batch persists its narrow winner aggregate,
+    # counts it exactly and joins against that same frame. 0 forces the
+    # shuffle, 2**62 the broadcast.
+    #
+    # The threshold is the key-count at which a driver-built broadcast of
     # (key, packed-version) rows stops paying for itself (build + per-executor
     # transfer vs shuffling the FULL pre-dedup batch). SET FROM DATA (BENCH.md
     # round-4 A/B tables: interleaved forced-variant samples at the bench's
@@ -144,8 +139,7 @@ class ReplayConfig:
     # maintenance). Bounds read amplification at <= mor_compact_after deltas
     # per bucket between maintenance runs.
     mor_compact_after: int | None = None
-    salted_dedup: bool = False  # back-compat alias for dedup_strategy="salted"
-    salt_buckets: int = 16
+    salt_buckets: int = 16  # dedup_strategy="salted": salts per key
     # Write-audit-publish (lake WAP surface): when set, every batch commits
     # STAGED (publish=False) and the hook runs with (table, staged_snapshot)
     # — read it via table.read(snapshot=staged) — returning True to publish
@@ -205,6 +199,11 @@ class BatchReport:
     skipped: bool = False
     schema_changes: int = 0
     phases: dict = field(default_factory=dict)
+    # the winner-join decision (dedup_strategy="winner"): {"join":
+    # "broadcast"|"shuffle", "basis": "events"|"winners", "n": the bound it
+    # was taken from — the batch's event count or its exact winner count}.
+    # A batch split by schema changes reports its last sub-batch.
+    winner_join: dict = field(default_factory=dict)
     # per-expectation violation counts for this batch (name -> rows)
     expectations: dict = field(default_factory=dict)
 
@@ -216,6 +215,10 @@ class ReplayEngine:
         self.cfg = config
         if config.resolution not in ("lww", "partial", "aggregate"):
             raise ValueError(f"unknown resolution: {config.resolution!r}")
+        if config.dedup_strategy not in ("winner", "salted"):
+            raise ValueError(
+                f"unknown dedup_strategy: {config.dedup_strategy!r}"
+            )
         self._partial = config.resolution in ("partial", "aggregate")
         self._agg_spec = (
             dict(config.agg_spec or {})
@@ -278,14 +281,6 @@ class ReplayEngine:
         from .metrics import LineageLog
 
         self.lineage = LineageLog(table.root)
-        # keys-per-event ratio learned EXACTLY from each applied batch
-        # (deduped_keys / events — free, it is the winner count the merge
-        # already reports). While set, the prepass skips the HLL sketch
-        # entirely and estimates the winner set as ratio * batch_events;
-        # a >2x drift between a cached prediction and the batch's actual
-        # winner count drops the cache so the next prepass re-measures.
-        self._key_ratio: float | None = None
-        self._est_from_cache = False
 
     # ---------- watermark filtering ----------
     def _unapplied(self, changelog: DataFrame) -> DataFrame:
@@ -313,31 +308,21 @@ class ReplayEngine:
         return (row["lo"], row["hi"]) if row["lo"] is not None else (0, -1)
 
     # ---------- batch stats ----------
-    def _batch_stats(self, batch: DataFrame, with_sketch: bool = True) -> list:
-        """Single-pass per-part stats for one batch: high-watermark, event
-        count, version bounds, and the set of target buckets touched (feeds
-        the merge so it never runs a separate probe job over the dedup plan).
+    def _stats_aggs(self) -> list:
+        """Per-part stats aggregates: high-watermark, event count, the set
+        of target buckets touched (feeds the merge so it never runs a
+        separate probe job over the dedup plan) and the version bounds.
 
         Deliberately PAYLOAD-FREE: dirty counting needs octet_length(payload),
         which would force this scan to read the whole payload column; dirty
         counts instead ride the merge job itself as observe() metrics (see
         apply_batch) and the error limit is asserted post-write, pre-publish —
         the reference's own end-of-transfer checkLimit semantics. The bucket
-        set here includes dirty rows' buckets: a superset is safe (extra
-        buckets are read and rewritten unchanged)."""
+        set includes dirty rows' buckets: a superset is safe (extra buckets
+        are read and rewritten unchanged)."""
         from ..lake.table import bucket_expr
 
-        # One groupBy(part) scan carrying a mergeable DataSketches HLL per
-        # part, then a TINY second job unions the sketches into the
-        # batch-global distinct-key count that feeds the broadcast-vs-shuffle
-        # winner-join auto-switch. Summing per-part distincts would OVERCOUNT
-        # keys spanning parts (~16x on a 16-part log); the previous fix —
-        # GROUPING SETS ((part), ()) — got exactness by EXPANDING every input
-        # row 2x through the aggregate pipeline, which measured 1.9x the
-        # whole prepass cost (tools/bench_prepass.py: 6.2 s vs 4.4 s for this
-        # shape vs 3.3 s with no estimate at all). The persist holds only the
-        # per-part agg rows (bounded: one per source partition).
-        aggs = [
+        return [
             F.max("offset").alias("hwm"),
             F.count("*").alias("n"),
             F.collect_set(
@@ -345,26 +330,6 @@ class ReplayEngine:
             ).alias("bks"),
             F.max("commit_lsn").alias("vl"),
             F.max("seq_no").alias("vs"),
-        ]
-        if not with_sketch:
-            # a cached key ratio replaces the sketch (apply_batch derives
-            # the estimate from events * ratio) — one collect, no persist
-            return list(batch.groupBy("part").agg(*aggs).collect())
-        base = batch.groupBy("part").agg(
-            *aggs,
-            F.hll_sketch_agg("doc_id").alias("_hsk"),
-        ).persist()
-        try:
-            rows = base.drop("_hsk").collect()
-            if not rows:
-                return []
-            tot = base.agg(
-                F.hll_sketch_estimate(F.hll_union_agg("_hsk")).alias("k")
-            ).collect()
-        finally:
-            base.unpersist()
-        return list(rows) + [
-            {"part": None, "k": tot[0]["k"] if tot else None}
         ]
 
     # ---------- one batch ----------
@@ -393,14 +358,7 @@ class ReplayEngine:
         # at 2.75M events/batch — BENCH notes in BASELINE.md).
         t_stats = time.time()
         if stats is None:
-            stats = self._batch_stats(
-                batch, with_sketch=self._key_ratio is None
-            )
-        # the grouping-sets total row (part IS NULL) carries the batch-global
-        # distinct-key estimate; everything positional below uses the real
-        # per-part rows
-        totals = [r for r in stats if r["part"] is None]
-        stats = [r for r in stats if r["part"] is not None]
+            stats = batch.groupBy("part").agg(*self._stats_aggs()).collect()
         watermarks = {int(r["part"]): int(r["hwm"]) for r in stats}
         events_n = sum(r["n"] for r in stats)
         affected_buckets = sorted({b for r in stats for b in r["bks"] if b is not None})
@@ -411,54 +369,14 @@ class ReplayEngine:
         self._version_bounds = (
             (int(max(vls)), int(max(vss))) if vls and vss else (None, None)
         )
-        # winner-set estimate for the broadcast auto-switch: the batch-global
-        # HLL count when the stats carry the total row; summing per-part
-        # distincts is only a (grossly over-counting) fallback for stats
-        # supplied by a pre-grouping-sets caller
-        self._est_from_cache = False
-        try:
-            if totals:
-                self._est_keys = int(totals[0]["k"])
-                self._est_from_cache = bool(
-                    isinstance(totals[0], dict) and totals[0].get("cached")
-                )
-            elif self._key_ratio is not None:
-                # prepass ran sketch-free on the cached ratio
-                self._est_keys = int(self._key_ratio * events_n)
-                self._est_from_cache = True
-            else:
-                self._est_keys = sum(int(r["k"]) for r in stats)
-        except (ValueError, KeyError, TypeError):
-            self._est_keys = None  # stats from a pre-k caller
         self._phase_timings = {"stats": round(time.time() - t_stats, 3)}
 
-        self._winners_exact = 0
-        self._winners_exact_ok = True
         report, dirty_by_part = self._apply_batch_inner(
             batch, batch_id, t0, events_n, watermarks,
             affected_buckets, crash_before_publish, crash_after_stage,
             observe_metrics,
         )
         report.phases = dict(self._phase_timings)
-        # learn the EXACT keys-per-event ratio from the applied batch (the
-        # observe() winner count above — free); a cached prediction that
-        # drifted >2x in either direction means the stream's dup structure
-        # shifted — drop the cache so the next prepass measures again
-        # instead of compounding the error
-        if (
-            events_n > 0
-            and self._winners_exact_ok
-            and self._winners_exact > 0
-        ):
-            pred = self._est_keys
-            if (
-                self._est_from_cache
-                and pred
-                and not (0.5 <= pred / self._winners_exact <= 2.0)
-            ):
-                self._key_ratio = None
-            else:
-                self._key_ratio = self._winners_exact / events_n
         per_part = {
             int(r["part"]): {
                 "hwm": r["hwm"],
@@ -563,6 +481,7 @@ class ReplayEngine:
             pred = contract_predicate(batch, partial=self._partial, pair_check=self._pair_check)
 
         deduped_total = 0
+        winner_join: dict = {}
         dirty_n = 0
         dirty_by_part: dict[int, int] = {}
         parts = sorted(watermarks)
@@ -586,7 +505,7 @@ class ReplayEngine:
                     F.struct(F.col("commit_lsn"), F.col("seq_no"))
                     < F.struct(F.lit(lsn).cast("bigint"), F.lit(seq).cast("bigint"))
                 )
-            applied, dstats = self._merge_sub_batch(
+            applied, dstats, join = self._merge_sub_batch(
                 sub,
                 dirty_pred=contract_predicate(sub, partial=self._partial, pair_check=self._pair_check),
                 parts=parts,
@@ -601,6 +520,7 @@ class ReplayEngine:
                 crash_after_stage=crash_after_stage,
             )
             deduped_total += applied
+            winner_join = join or winner_join
             dirty_n += dstats.pop("_total", 0)
             for p, v in dstats.items():
                 dirty_by_part[p] = dirty_by_part.get(p, 0) + v
@@ -622,6 +542,7 @@ class ReplayEngine:
                 time.time() - t0,
                 schema_changes=len(bounds),
                 expectations=exp_counts,
+                winner_join=winner_join,
             ),
             dirty_by_part,
         )
@@ -640,8 +561,9 @@ class ReplayEngine:
         affected_buckets: list[int] | None,
         crash_before_publish: bool,
         crash_after_stage: bool,
-    ) -> tuple[int, dict]:
-        """Returns (applied 0/1, dirty stats {part -> n, "_total": n}).
+    ) -> tuple[int, dict, dict]:
+        """Returns (winners applied — 0 when nothing merged, dirty stats
+        {part -> n, "_total": n}, the winner-join decision or {}).
 
         ``sub`` arrives UNFILTERED (dirty rows included): the quarantine split
         happens here so the dirty counts can ride the merge job itself as
@@ -728,262 +650,265 @@ class ReplayEngine:
 
         src = project(clean_kept)
         src_agg = project(clean_agg)
-        strategy = "salted" if self.cfg.salted_dedup else self.cfg.dedup_strategy
         nb = self.table.bucket_count()
-        if self._partial:
-            # partial-update streams: NO winner prune — losing events still
-            # carry column values the collapse must see. One hash(key)
-            # exchange into the table's bucket layout (reused by the MERGE
-            # join and the bucket-aligned write), one sorted window pass.
-            from .dedup import aggregate_collapse
+        join: dict = {}
+        cached = None  # a large batch's persisted winner aggregate
+        try:
+            if self._partial:
+                # partial-update streams: NO winner prune — losing events still
+                # carry column values the collapse must see. One hash(key)
+                # exchange into the table's bucket layout (reused by the MERGE
+                # join and the bucket-aligned write), one sorted window pass.
+                from .dedup import aggregate_collapse
 
-            if raw_mode or "extra" in src.columns:
-                raise ValueError(
-                    "resolution='partial' supports directly-decoded event "
-                    "columns only (no binary payload / semi-structured "
-                    "'extra' map)"
-                )
-            if self.cfg.merge_mode == "mor":
-                # RAW-EVENT deltas. The batch collapse embeds older setters'
-                # values at the winner's version, which is only sound when
-                # batch version-ranges never interleave (the batch driver's
-                # LSN-ordered offset windows guarantee that; a streaming
-                # tail's FILE-split micro-batches do NOT). MoR needs no
-                # write-time collapse for correctness — the read fold IS the
-                # collapse over the whole reconstructed stream
-                # (lake/table.resolve_columnwise) — so each event appends as
-                # its own delta row, I events marked as restarts at their
-                # own version, and resolution is exact under ANY delivery
-                # order. One hash(key) exchange; the exact-duplicate drop
-                # extends the partition key, so it aggregates in place.
-                deduped = (
-                    src.repartition(nb, F.col("doc_id"))
-                    .dropDuplicates(["doc_id", "commit_lsn", "seq_no"])
-                    .withColumn(
-                        "_rv_lsn",
-                        F.when(
-                            F.col("op") == "I", F.col("commit_lsn")
-                        ).cast("bigint"),
+                if raw_mode or "extra" in src.columns:
+                    raise ValueError(
+                        "resolution='partial' supports directly-decoded event "
+                        "columns only (no binary payload / semi-structured "
+                        "'extra' map)"
                     )
-                    .withColumn(
-                        "_rv_seq",
-                        F.when(F.col("op") == "I", F.col("seq_no")).cast(
-                            "bigint"
-                        ),
+                if self.cfg.merge_mode == "mor":
+                    # RAW-EVENT deltas. The batch collapse embeds older setters'
+                    # values at the winner's version, which is only sound when
+                    # batch version-ranges never interleave (the batch driver's
+                    # LSN-ordered offset windows guarantee that; a streaming
+                    # tail's FILE-split micro-batches do NOT). MoR needs no
+                    # write-time collapse for correctness — the read fold IS the
+                    # collapse over the whole reconstructed stream
+                    # (lake/table.resolve_columnwise) — so each event appends as
+                    # its own delta row, I events marked as restarts at their
+                    # own version, and resolution is exact under ANY delivery
+                    # order. One hash(key) exchange; the exact-duplicate drop
+                    # extends the partition key, so it aggregates in place.
+                    deduped = (
+                        src.repartition(nb, F.col("doc_id"))
+                        .dropDuplicates(["doc_id", "commit_lsn", "seq_no"])
+                        .withColumn(
+                            "_rv_lsn",
+                            F.when(
+                                F.col("op") == "I", F.col("commit_lsn")
+                            ).cast("bigint"),
+                        )
+                        .withColumn(
+                            "_rv_seq",
+                            F.when(F.col("op") == "I", F.col("seq_no")).cast(
+                                "bigint"
+                            ),
+                        )
                     )
-                )
-            else:
-                deduped = aggregate_collapse(
-                    src,
-                    "doc_id",
-                    agg_spec=self._agg_spec or None,
-                    payload_cols=[
-                        c
-                        for c in src.columns
-                        if c not in ("doc_id", "op", "commit_lsn", "seq_no")
-                    ],
-                    num_partitions=nb,
-                )
-        elif strategy == "salted":
-            deduped = lww_dedup_salted(src, "doc_id", self.cfg.salt_buckets)
-        elif strategy == "maxby":
-            deduped = lww_dedup(src, "doc_id")
-        elif strategy == "winner":
-            # JVM-side winner prune (no Python, no payload-wide shuffle), then
-            # one winners-only repartition to the table bucket count. Decode
-            # runs BEFORE that exchange, map-side: ArrowEvalPython erases the
-            # partitioning a node reports (verified via explain — placing it
-            # after the repartition re-inserts an ENSURE_REQUIREMENTS exchange
-            # ahead of the MERGE join), while placed here it rides the same
-            # stage as the scan+filter and Python still sees only winners.
-            # The dropDuplicates collapses exact duplicate deliveries of a
-            # winning event (identical payloads by contract); its grouping key
-            # matches the repartition, so the aggregate runs IN PLACE and the
-            # HashPartitioning(doc_id, nb) survives through it and the final
-            # projections: the MERGE join and the bucket-aligned write add NO
-            # further exchange — ONE winners-sized shuffle end-to-end.
-            lm, sm = getattr(self, "_version_bounds", (None, None))
-            use_broadcast = self.cfg.broadcast_winners
-            if use_broadcast is None:
-                # AUTO: broadcast only while the estimated winner set is small
-                # enough that the driver-side build beats an extra shuffled-
-                # hash stage; unknown estimate -> broadcast (small-batch path)
-                est = getattr(self, "_est_keys", None)
-                use_broadcast = (
-                    est is None or est <= self.cfg.broadcast_winners_max_keys
-                )
-            self._last_winner_join = "broadcast" if use_broadcast else "shuffle"
-
-            def decode_proj(frame):
-                from .parse import decode_tokens
-
-                pos = frame.columns.index("payload")
-                return frame.select(
-                    *[
-                        decode_tokens(F.col("payload")).alias("tokens")
-                        if i == pos
-                        else F.col(c)
-                        for i, c in enumerate(frame.columns)
-                    ]
-                )
-
-            if use_broadcast:
-                kept = winner_filter(
-                    src, "doc_id", lsn_max=lm, seq_max=sm, winners_from=src_agg
-                )
-                if raw_mode:
-                    kept = decode_proj(kept)
-                    raw_mode = False
-                deduped = kept.repartition(nb, F.col("doc_id")).dropDuplicates(
-                    ["doc_id"]
-                )
-            else:
-                # all-shuffle variant: one hash(key) exchange of the full
-                # batch (the explicit north-rule shuffle), winners joined
-                # shuffled-hash in place, dedup agg in place, decode after —
-                # no driver-side fixed cost anywhere in the pipeline
-                parted = src.repartition(nb, F.col("doc_id"))
-                kept = winner_filter(
-                    parted, "doc_id", broadcast_winners=False,
-                    lsn_max=lm, seq_max=sm, winners_from=src_agg,
-                )
-                deduped = kept.dropDuplicates(["doc_id"])
-                if raw_mode:
-                    deduped = decode_proj(deduped)
-                    raw_mode = False
-        else:
-            # partition count = table bucket count: this one shuffle feeds the
-            # kernel, the MERGE join, AND the per-bucket file write (see
-            # lake/table.py bucket_expr)
-            deduped = lww_dedup_arrow(src, "doc_id", num_partitions=nb)
-        if raw_mode:
-            deduped = parse_events(deduped)
-        # project up to the live table schema: evolved columns arrive either
-        # directly, via the semi-structured after-image map, or null-filled
-        out_cols = []
-        rev_aliases: dict[str, list[str]] = {}
-        for old, new in alias_of.items():
-            rev_aliases.setdefault(new, []).append(old)
-        for c in cols:
-            candidates = [c, *rev_aliases.get(c, [])]  # current name first
-            hit = next((n for n in candidates if n in deduped.columns), None)
-            typ = dict(schema.fields)[c]
-            if hit is not None:
-                out_cols.append(F.col(hit).cast(typ).alias(c))
-            elif "extra" in deduped.columns:
-                # the after-image map may also use a pre-rename field name
-                out_cols.append(
-                    F.coalesce(
-                        *[
-                            F.try_element_at(F.col("extra"), F.lit(n)).try_cast(typ)
-                            for n in candidates
-                        ]
-                    ).alias(c)
-                )
-            else:
-                out_cols.append(F.lit(None).cast(typ).alias(c))
-        deduped = deduped.select(
-            *out_cols,
-            "op",
-            "commit_lsn",
-            "seq_no",
-            *(["_rv_lsn", "_rv_seq"] if self._partial else []),
-        )
-        wobs = None
-        if observe_metrics:
-            # exact winner count riding the SAME write job (observe node on
-            # the collapsed changeset — no extra action). Feeds the key-ratio
-            # cache that lets later prepasses skip the HLL sketch. Skipped in
-            # streaming mode with the dirty observation (same deadlock).
-            from pyspark.sql import Observation
-
-            wobs = Observation()
-            deduped = deduped.observe(
-                wobs, F.count(F.lit(1)).alias("nw")
-            )
-        metrics = {"events": events_n}
-        summary = {"batch_id": batch_id, "metrics": metrics} if final else {
-            "batch_id": batch_id
-        }
-        if final and watermarks is not None:
-            summary["watermarks"] = watermarks
-        holder: dict = {}
-
-        def pre_publish():
-            # runs after the write job, before the snapshot publishes: the
-            # observe metrics are final here
-            if wobs is not None:
-                # persist the batch's exact winner count in the snapshot
-                # metrics: a FRESH engine resuming this table restores the
-                # keys-per-event ratio from it and skips the sketch on its
-                # very first prepass (replay() cache seeding)
-                try:
-                    metrics["winners"] = int(dict(wobs.get).get("nw") or 0)
-                except Exception:
-                    pass
-            if obs is None:
-                holder.update(static_dirty)
-                metrics["dirty"] = static_dirty.get("nd", 0)
-                return  # limit already asserted up front in this mode
-            try:
-                got = dict(obs.get)
-            except Exception:
-                # the observe node never materialized: when EVERY row of the
-                # batch is dirty (e.g. a no-fix quarantine requeue) the
-                # kept-branch subtree collapses to an empty relation and the
-                # write job runs without it — Observation.get then fails
-                # JVM-side. Fall back to one narrow dirty count (the batch is
-                # fully dirty in exactly the case this triggers, so the scan
-                # is the quarantine path's own cost, not a second data pass).
-                got = {}
-            if got.get("nd") is None:
-                if "part" in sub.columns:
-                    rows = (
-                        sub.where(dirty_pred)
-                        .groupBy("part")
-                        .agg(F.count("*").alias("nd"))
-                        .collect()
-                    )
-                    got = {f"nd_{int(r['part'])}": int(r["nd"]) for r in rows}
-                    got["nd"] = sum(int(r["nd"]) for r in rows)
                 else:
-                    got = {"nd": sub.where(dirty_pred).count()}
-            holder.update(got)
-            nd = int(got.get("nd") or 0)
-            metrics["dirty"] = nd
-            self.cfg.error_limit.check(prior_dirty + nd, max(events_n, 1))
+                    deduped = aggregate_collapse(
+                        src,
+                        "doc_id",
+                        agg_spec=self._agg_spec or None,
+                        payload_cols=[
+                            c
+                            for c in src.columns
+                            if c not in ("doc_id", "op", "commit_lsn", "seq_no")
+                        ],
+                        num_partitions=nb,
+                    )
+            elif self.cfg.dedup_strategy == "salted":
+                deduped = lww_dedup_salted(src, "doc_id", self.cfg.salt_buckets)
+            else:
+                # JVM-side winner prune (no Python, no payload-wide shuffle), then
+                # one winners-only repartition to the table bucket count. Decode
+                # runs BEFORE that exchange, map-side: ArrowEvalPython erases the
+                # partitioning a node reports (verified via explain — placing it
+                # after the repartition re-inserts an ENSURE_REQUIREMENTS exchange
+                # ahead of the MERGE join), while placed here it rides the same
+                # stage as the scan+filter and Python still sees only winners.
+                # The dropDuplicates collapses exact duplicate deliveries of a
+                # winning event (identical payloads by contract); its grouping key
+                # matches the repartition, so the aggregate runs IN PLACE and the
+                # HashPartitioning(doc_id, nb) survives through it and the final
+                # projections: the MERGE join and the bucket-aligned write add NO
+                # further exchange — ONE winners-sized shuffle end-to-end.
+                lm, sm = getattr(self, "_version_bounds", (None, None))
+                versions = winner_versions(src_agg, "doc_id", lsn_max=lm, seq_max=sm)
+                limit = self.cfg.broadcast_winners_max_keys
+                if events_n <= limit:
+                    # a batch never has more winners than events: the
+                    # prepass count already bounds the winner set
+                    join = {"join": "broadcast", "basis": "events", "n": events_n}
+                else:
+                    # count the winners exactly, on the SAME persisted frame
+                    # the join then reads (no second scan of the batch)
+                    t_w = time.time()
+                    versions = cached = versions.persist()
+                    k = versions.count()
+                    join = {
+                        "join": "broadcast" if k <= limit else "shuffle",
+                        "basis": "winners",
+                        "n": k,
+                    }
+                    self._phase_timings["winner_count"] = round(
+                        time.time() - t_w, 3
+                    )
 
-        wap = self.cfg.wap_audit is not None
-        v_before = self.table.current_version()
-        if self.cfg.merge_mode == "mor":
-            from ..lake.merge import delta_append
+                def decode_proj(frame):
+                    from .parse import decode_tokens
 
-            snap = delta_append(
-                self.table,
-                deduped,
-                summary_update=summary,
-                affected_buckets=affected_buckets,
-                bucket_aligned=True,
-                crash_before_publish=crash_before_publish and final,
-                crash_after_stage=crash_after_stage and final,
-                timings=getattr(self, "_phase_timings", None),
-                pre_publish_check=pre_publish,
-                publish=not wap,
+                    pos = frame.columns.index("payload")
+                    return frame.select(
+                        *[
+                            decode_tokens(F.col("payload")).alias("tokens")
+                            if i == pos
+                            else F.col(c)
+                            for i, c in enumerate(frame.columns)
+                        ]
+                    )
+
+                if join["join"] == "broadcast":
+                    kept = winner_filter(
+                        src, "doc_id", lsn_max=lm, seq_max=sm, winners=versions
+                    )
+                    if raw_mode:
+                        kept = decode_proj(kept)
+                        raw_mode = False
+                    deduped = kept.repartition(nb, F.col("doc_id")).dropDuplicates(
+                        ["doc_id"]
+                    )
+                else:
+                    # all-shuffle variant: one hash(key) exchange of the full
+                    # batch (the explicit north-rule shuffle), winners joined
+                    # shuffled-hash in place, dedup agg in place, decode after —
+                    # no driver-side fixed cost anywhere in the pipeline
+                    parted = src.repartition(nb, F.col("doc_id"))
+                    kept = winner_filter(
+                        parted, "doc_id", broadcast=False,
+                        lsn_max=lm, seq_max=sm, winners=versions,
+                    )
+                    deduped = kept.dropDuplicates(["doc_id"])
+                    if raw_mode:
+                        deduped = decode_proj(deduped)
+                        raw_mode = False
+            if raw_mode:
+                deduped = parse_events(deduped)
+            # project up to the live table schema: evolved columns arrive either
+            # directly, via the semi-structured after-image map, or null-filled
+            out_cols = []
+            rev_aliases: dict[str, list[str]] = {}
+            for old, new in alias_of.items():
+                rev_aliases.setdefault(new, []).append(old)
+            for c in cols:
+                candidates = [c, *rev_aliases.get(c, [])]  # current name first
+                hit = next((n for n in candidates if n in deduped.columns), None)
+                typ = dict(schema.fields)[c]
+                if hit is not None:
+                    out_cols.append(F.col(hit).cast(typ).alias(c))
+                elif "extra" in deduped.columns:
+                    # the after-image map may also use a pre-rename field name
+                    out_cols.append(
+                        F.coalesce(
+                            *[
+                                F.try_element_at(F.col("extra"), F.lit(n)).try_cast(typ)
+                                for n in candidates
+                            ]
+                        ).alias(c)
+                    )
+                else:
+                    out_cols.append(F.lit(None).cast(typ).alias(c))
+            deduped = deduped.select(
+                *out_cols,
+                "op",
+                "commit_lsn",
+                "seq_no",
+                *(["_rv_lsn", "_rv_seq"] if self._partial else []),
             )
-        else:
-            snap = merge_upsert(
-                self.table,
-                deduped,
-                summary_update=summary,
-                affected_buckets=affected_buckets,
-                crash_before_publish=crash_before_publish and final,
-                crash_after_stage=crash_after_stage and final,
-                timings=getattr(self, "_phase_timings", None),
-                pre_publish_check=pre_publish,
-                publish=not wap,
-                partial_update=self._partial,
-                agg_spec=self._agg_spec or None,
-            )
+            wobs = None
+            if observe_metrics:
+                # exact winner count riding the SAME write job (observe node on
+                # the collapsed changeset — no extra action): the report's
+                # deduped_keys and the snapshot's metrics.winners. Skipped in
+                # streaming mode with the dirty observation (same deadlock).
+                from pyspark.sql import Observation
+
+                wobs = Observation()
+                deduped = deduped.observe(
+                    wobs, F.count(F.lit(1)).alias("nw")
+                )
+            metrics = {"events": events_n}
+            summary = {"batch_id": batch_id, "metrics": metrics} if final else {
+                "batch_id": batch_id
+            }
+            if final and watermarks is not None:
+                summary["watermarks"] = watermarks
+            holder: dict = {}
+
+            def pre_publish():
+                # runs after the write job, before the snapshot publishes: the
+                # observe metrics are final here
+                if wobs is not None:
+                    try:
+                        metrics["winners"] = int(dict(wobs.get).get("nw") or 0)
+                    except Exception:
+                        pass
+                if obs is None:
+                    holder.update(static_dirty)
+                    metrics["dirty"] = static_dirty.get("nd", 0)
+                    return  # limit already asserted up front in this mode
+                try:
+                    got = dict(obs.get)
+                except Exception:
+                    # the observe node never materialized: when EVERY row of the
+                    # batch is dirty (e.g. a no-fix quarantine requeue) the
+                    # kept-branch subtree collapses to an empty relation and the
+                    # write job runs without it — Observation.get then fails
+                    # JVM-side. Fall back to one narrow dirty count (the batch is
+                    # fully dirty in exactly the case this triggers, so the scan
+                    # is the quarantine path's own cost, not a second data pass).
+                    got = {}
+                if got.get("nd") is None:
+                    if "part" in sub.columns:
+                        rows = (
+                            sub.where(dirty_pred)
+                            .groupBy("part")
+                            .agg(F.count("*").alias("nd"))
+                            .collect()
+                        )
+                        got = {f"nd_{int(r['part'])}": int(r["nd"]) for r in rows}
+                        got["nd"] = sum(int(r["nd"]) for r in rows)
+                    else:
+                        got = {"nd": sub.where(dirty_pred).count()}
+                holder.update(got)
+                nd = int(got.get("nd") or 0)
+                metrics["dirty"] = nd
+                self.cfg.error_limit.check(prior_dirty + nd, max(events_n, 1))
+
+            wap = self.cfg.wap_audit is not None
+            if self.cfg.merge_mode == "mor":
+                from ..lake.merge import delta_append
+
+                snap = delta_append(
+                    self.table,
+                    deduped,
+                    summary_update=summary,
+                    affected_buckets=affected_buckets,
+                    bucket_aligned=True,
+                    crash_before_publish=crash_before_publish and final,
+                    crash_after_stage=crash_after_stage and final,
+                    timings=getattr(self, "_phase_timings", None),
+                    pre_publish_check=pre_publish,
+                    publish=not wap,
+                )
+            else:
+                snap = merge_upsert(
+                    self.table,
+                    deduped,
+                    summary_update=summary,
+                    affected_buckets=affected_buckets,
+                    crash_before_publish=crash_before_publish and final,
+                    crash_after_stage=crash_after_stage and final,
+                    timings=getattr(self, "_phase_timings", None),
+                    pre_publish_check=pre_publish,
+                    publish=not wap,
+                    partial_update=self._partial,
+                    agg_spec=self._agg_spec or None,
+                )
+        finally:
+            if cached is not None:
+                cached.unpersist()
         # write-audit-publish gate. A merge that found the batch already
         # applied returns the CURRENT snapshot (version == pointer) — nothing
         # staged, nothing to audit.
@@ -1032,45 +957,10 @@ class ReplayEngine:
                 if key.startswith("nd_"):
                     dstats[int(key[3:])] = int(v or 0)
         if snap is None:
-            return (0, dstats)
-        winners = 1  # applied, exact count unavailable
-        if wobs is not None and snap.version != v_before:
-            # the write job ran (version moved / staged) -> the observation
-            # fired; never read it otherwise (get would block forever on an
-            # already-applied short-circuit that skipped the action)
-            try:
-                winners = max(int(dict(wobs.get).get("nw") or 0), 1)
-                self._winners_exact = (
-                    getattr(self, "_winners_exact", 0) + winners
-                )
-            except Exception:
-                self._winners_exact_ok = False
-        elif self.cfg.merge_mode == "mor" and snap.version != v_before:
-            # streaming path (Observation disabled): a MoR commit's OWN
-            # delta files carry exact row counts in the manifest — the same
-            # winner count, free. Keeps the ratio cache learning (and the
-            # sketch skipped) under foreachBatch micro-batches too.
-            try:
-                prev = {
-                    f["path"] for f in self.table.snapshot(v_before).files
-                }
-                nw = sum(
-                    int(f.get("rows") or 0)
-                    for f in snap.files
-                    if f["path"] not in prev
-                )
-                if nw > 0:
-                    winners = nw
-                    self._winners_exact = (
-                        getattr(self, "_winners_exact", 0) + nw
-                    )
-                else:
-                    self._winners_exact_ok = False
-            except Exception:
-                self._winners_exact_ok = False
-        else:
-            self._winners_exact_ok = False
-        return (winners, dstats)
+            return (0, dstats, join)
+        # the observe() winner count pre_publish recorded; 1 = applied but
+        # uncounted (streaming, or a merge that found the batch applied)
+        return (max(metrics.get("winners", 1), 1), dstats, join)
 
     # ---------- full replay ----------
     def replay(
@@ -1091,17 +981,6 @@ class ReplayEngine:
         without scanning; callers that do (generators, staged benchmarks) pass
         it to skip the planning scan. None -> derived with one aggregate scan.
         """
-        if self._key_ratio is None:
-            # resume seeding: the last replay commit recorded its exact
-            # winner/event counts in the snapshot metrics — a fresh engine
-            # (crash/resume, next scheduled run) restores the ratio and
-            # skips the sketch from its very first prepass
-            m = (self.table.snapshot().summary or {}).get("metrics") or {}
-            try:
-                if int(m.get("winners") or 0) > 0 and int(m.get("events") or 0) > 0:
-                    self._key_ratio = int(m["winners"]) / int(m["events"])
-            except (TypeError, ValueError):
-                pass
         remaining = self._unapplied(changelog)
         if bounds is not None:
             n_parts, lo, hi = bounds
@@ -1136,78 +1015,18 @@ class ReplayEngine:
 
         # prepass: the per-batch stats for EVERY offset window in one job —
         # one NARROW scan of the remaining log instead of one scan per batch.
-        # Payload-free by design (see _batch_stats): reading the payload
+        # Payload-free by design (see _stats_aggs): reading the payload
         # column here just to pre-count dirty records measured ~25 CPU-s per
         # 16.8M events; dirty counts ride the merge jobs as observe metrics.
-        from ..lake.table import bucket_expr
-
         t_pre = time.time()
         win = F.floor((F.col("offset") - F.lit(lo)) / F.lit(per_part)).cast("int")
-        # Per-(window, part) rows for watermarks/lineage carry a mergeable
-        # DataSketches HLL each; a second TINY job (input: the persisted agg
-        # rows, one per window x part) unions them into the per-window global
-        # key estimate for the winner-join auto-switch. A per-part SUM
-        # over-counts keys spanning parts (~16x); the previous exact fix,
-        # GROUPING SETS ((w,part),(w)), expanded every input row 2x through
-        # the aggregate pipeline and measured 1.9x this shape's cost
-        # (tools/bench_prepass.py; it was ~14% of clean replay wall).
-        aggs = [
-            F.max("offset").alias("hwm"),
-            F.count("*").alias("n"),
-            F.collect_set(
-                bucket_expr("doc_id", self.table.bucket_count())
-            ).alias("bks"),
-            F.max("commit_lsn").alias("vl"),
-            F.max("seq_no").alias("vs"),
-        ]
-        use_cached = self._key_ratio is not None
-        if use_cached:
-            # the engine already measured this stream's keys-per-event ratio
-            # exactly (observe() winner counts): sketch-free prepass, single
-            # collect; the per-window estimate is ratio * window_events below
-            pre = list(
-                remaining.groupBy(win.alias("w"), F.col("part"))
-                .agg(*aggs)
-                .collect()
-            )
-            totals = []
-        else:
-            # full mergeable sketch per (window, part) + tiny union job.
-            # A 1/32 hash-slice SAMPLED sketch was A/B'd here and is a wash
-            # (tools/bench_prepass.py round 5: sampled 3.08 s vs full 2.96 s
-            # vs no-estimate 2.28 s at 4 lanes / 31.5M events — the gating
-            # xxhash64+branch costs per row what the skipped sketch updates
-            # save), so the simple full sketch ships. The cached-ratio
-            # branch above is the real saving: this path only runs until
-            # the first batch lands.
-            base = (
-                remaining.groupBy(win.alias("w"), F.col("part"))
-                .agg(
-                    *aggs,
-                    F.hll_sketch_agg("doc_id").alias("_hsk"),
-                )
-                .persist()
-            )
-            try:
-                pre = base.drop("_hsk").collect()
-                totals = base.groupBy("w").agg(
-                    F.hll_sketch_estimate(F.hll_union_agg("_hsk")).alias("k")
-                ).collect()
-            finally:
-                base.unpersist()
         stats_by_window: dict[int, list] = {}
-        for r in pre:
+        for r in (
+            remaining.groupBy(win.alias("w"), F.col("part"))
+            .agg(*self._stats_aggs())
+            .collect()
+        ):
             stats_by_window.setdefault(int(r["w"]), []).append(r)
-        for r in totals:
-            stats_by_window.setdefault(int(r["w"]), []).append(
-                {"part": None, "k": r["k"]}
-            )
-        if use_cached:
-            for rows_w in stats_by_window.values():
-                ev_w = sum(int(r["n"]) for r in rows_w)
-                rows_w.append(
-                    {"part": None, "k": self._key_ratio * ev_w, "cached": True}
-                )
         prepass_s = round(time.time() - t_pre, 3)
 
         b = 0

@@ -1662,7 +1662,7 @@ def q_cdc_salted_skew_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4 gate row: the SALTED two-phase LWW dedup under hot-key skew must
     equal the plain window semantics. The salt spreads the hot key's partial
     max over (key, salt) groups so no single task owns the whole hot key;
-    the final per-key max collapses them (cdc/dedup.py:211-228)."""
+    the final per-key max collapses them (cdc/dedup.py lww_dedup_salted)."""
     from .cdc.dedup import lww_dedup_salted
 
     latest = lww_dedup_salted(_skewed_src(spark, sf_dir), "doc_id", 16)

@@ -256,17 +256,21 @@ def pack_bins(
         k_map = F.create_map(
             *[F.lit(x) for p, k in sorted(streams.items()) for x in (p, k)]
         )
+        # a part value missing from the counts (an upstream that changed
+        # between the count and the pack) packs as ONE stream, not NULL
         slim = slim.withColumn(
             "_stream",
-            F.pmod(F.xxhash64(F.col(id_col)), k_map[F.col(part_col)])
-            .cast("bigint"),
+            F.pmod(
+                F.xxhash64(F.col(id_col)),
+                F.coalesce(k_map[F.col(part_col)], F.lit(1)),
+            ).cast("bigint"),
         )
 
     def pack(key, pdf):
         import numpy as np
 
         k = streams.get(key[0], 1)
-        stream = int(key[1])
+        stream = int(key[1] or 0)
         pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
         n = len(pdf)
         lens = pdf[len_col].to_numpy("int64")
