@@ -341,3 +341,79 @@ def test_watermark_merge_is_monotone(spark, tmp_path):
              summary_update={"watermarks": {0: 40, 1: 7}, "batch_id": "w2"})
     wm = t.snapshot().watermarks()
     assert wm["0"] == 100 and wm["1"] == 7
+
+
+def _jobs_in_group(spark, group):
+    """Job ids the status store holds for ``group``, after the listener bus
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_manifest_listed_reads_launch_no_listing_job(spark, tmp_path):
+    """The manifest is the file list: on a MoR table with more live files
+    than Spark's parallel-listing threshold (32 paths), building the
+    DataFrames of read(), lookup() and verify_table launches no Spark job
+    (Spark would otherwise re-list the files in a job of one task per file).
+    The resolved read stays oracle-equal, and the session's threshold ends
+    at its prior value, also after six threads read at once, and unset when
+    it was unset."""
+    import sys
+    from threading import Thread
+
+    from tg_data_connector_spark.lake.inspect import verify_table
+
+    conf = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    log = gen_changelog(spark, N_EVENTS, N_DOCS, n_parts=N_PARTS)
+    t, seed = _setup(spark, str(tmp_path / "t"))
+    ReplayEngine(
+        spark, t, ReplayConfig(events_per_batch=800, merge_mode="mor")
+    ).replay(log, run_id="mor")
+    n_files = len(t.snapshot().files)
+    assert n_files > 32 and _delta_files(t)
+    keys = [r["doc_id"] for r in seed.select("doc_id").limit(5).collect()]
+
+    sc = spark.sparkContext
+    group = "manifest-listed-reads"
+    spark.conf.set(conf, "31")  # a non-default prior, restored exactly
+    try:
+        sc.setJobGroup(group, "build read/lookup/verify DataFrames")
+        try:
+            frames = [t.read(), t.lookup(keys), verify_table(t)]
+            assert _jobs_in_group(spark, group) == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert spark.conf.get(conf) == "31"
+
+        oracle = _sorted_rows(oracle_final_state(seed, log))
+        assert _sorted_rows(frames[0]) == oracle
+        assert _sorted_rows(frames[1]) == [
+            r for r in oracle if r["doc_id"] in keys
+        ]
+        assert frames[2].collect() == []
+
+        # more reader threads than cores, switching often: a lost
+        # raise/restore would leave the threshold off its prior value
+        built = [None] * 6
+
+        def reader(i):
+            built[i] = t.read()
+
+        threads = [Thread(target=reader, args=(i,)) for i in range(6)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(th.is_alive() for th in threads)
+        assert spark.conf.get(conf) == "31"
+        assert [_sorted_rows(df) for df in built[:2]] == [oracle, oracle]
+    finally:
+        spark.conf.unset(conf)
+    # an unset key is unset again afterwards, not pinned to the default
+    t.read()
+    assert spark.conf.get(conf, None) is None

@@ -328,3 +328,60 @@ def test_pack_bins_part_value_missing_from_counts(spark, tmp_path):
     _check_bins_valid(got, rows, 64)
     late = [(b, d, off) for s, b, d, off, _, _ in got if s == "late"]
     assert late == [(0, 0, 0), (0, 1, 30), (1, 2, 0)]  # one greedy stream
+
+
+def test_assemble_bins_default_bound_keeps_small_sources_whole(spark):
+    """assemble_bins bounds one pandas group by default
+    (BINS_MAX_DOCS_PER_STREAM); a source at or below the bound packs as one
+    stream, so the output equals an unbounded run, for an empty input too."""
+    import inspect
+
+    from tg_data_connector_spark.operators.packing import (
+        BINS_MAX_DOCS_PER_STREAM, assemble_bins,
+    )
+
+    param = inspect.signature(assemble_bins).parameters["max_docs_per_stream"]
+    assert param.default == BINS_MAX_DOCS_PER_STREAM
+    schema = "source string, doc_id string, tokens array<int>, n_tok int"
+    rows = [
+        ("web" if i % 3 else "wiki", f"d{i:02d}", list(range(i % 9 + 1)),
+         i % 9 + 1)
+        for i in range(30)
+    ]
+    for data in (rows, []):
+        df = spark.createDataFrame(data, schema)
+        got = [
+            sorted(tuple(r) for r in out.collect())
+            for out in (assemble_bins(df, window=16),
+                        assemble_bins(df, window=16, max_docs_per_stream=None))
+        ]
+        assert got[0] == got[1]
+    assert len(got[0]) == 0
+
+
+def test_pack_bins_bounded_null_source(spark):
+    """A NULL part value on the bounded path (which assemble_bins takes by
+    default) packs as its own stream, split by the bound like any other
+    source, instead of failing on the driver's per-source map."""
+    from tg_data_connector_spark.operators.packing import pack_bins
+
+    rows = [(None if i % 2 else "a", i, 30) for i in range(20)]
+    df = spark.createDataFrame(rows, "source string, doc_id int, n_tok int")
+    got = [
+        ("<null>" if r[0] is None else r[0], *r[1:])
+        for r in pack_bins(df, window=64, max_docs_per_stream=4).collect()
+    ]
+    _check_bins_valid(got, [("<null>" if s is None else s, d, n)
+                            for s, d, n in rows], 64)
+    # 10 NULL-source docs, 4 per stream -> k = 3 sub-streams, and bin_id =
+    # local_bin * k + sub-stream with sub-stream = pmod(xxhash64(id), k)
+    stream = {
+        r["doc_id"]: r["s"]
+        for r in df.select(
+            "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(3)).alias("s")
+        ).collect()
+    }
+    null_docs = [(d, b) for s, b, d, *_ in got if s == "<null>"]
+    assert len(null_docs) == 10
+    assert all(b % 3 == stream[d] for d, b in null_docs)
+    assert len({stream[d] for d, _ in null_docs}) > 1

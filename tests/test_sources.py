@@ -382,6 +382,43 @@ def test_hadoop_snappy_csv_reads_with_skip(spark, tmp_path):
                    (10, "y0"), (11, "y1"), (12, "y2")]
 
 
+def test_latin1_whole_file_paths_honour_encoding(spark, tmp_path):
+    """The per-file skip path decodes with the reader's ``encoding`` on the
+    hadoop-snappy path, on the many-file whole-file path and on few plain
+    files; latin-1 bytes that are invalid UTF-8 read back as written."""
+    from tg_data_connector_spark.sources.files import (
+        _MAX_UNION_FILES, ColumnEntry, read_typed_csv,
+    )
+    from tg_data_connector_spark.sources.snappy_codec import (
+        hadoop_snappy_compress,
+    )
+
+    entries = [ColumnEntry(type="long", index=0, name="id"),
+               ColumnEntry(type="string", index=1, name="v")]
+
+    def body(i):
+        return f"entête\n{i},café{i}\n".encode("latin-1")
+
+    cases = {"snappy": (3, "hadoop-snappy"),
+             "many": (_MAX_UNION_FILES + 8, None),
+             "few": (2, None)}
+    for name, (n, compression) in cases.items():
+        d = tmp_path / name
+        d.mkdir()
+        for i in range(n):
+            data = body(i)
+            if compression:
+                data = hadoop_snappy_compress(data, block=8)
+            (d / f"p{i:03d}.csv").write_bytes(data)
+        clean, dirty = read_typed_csv(
+            spark, str(d), entries, skip_lines=1, encoding="iso-8859-1",
+            compression=compression,
+        )
+        got = sorted((r["id"], r["v"]) for r in clean.collect())
+        assert got == [(i, f"café{i}") for i in range(n)], name
+        assert dirty.count() == 0
+
+
 def test_snappy_codec_property_roundtrip():
     """Property: decompress(compress(x)) == x for both containers across
     arbitrary byte payloads and chunk/block sizes (hypothesis)."""

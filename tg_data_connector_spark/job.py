@@ -367,7 +367,8 @@ def _write(spark: SparkSession, cfg: dict, df: DataFrame) -> int | None:
         out = df
         if window > 0 and packing == "bins":
             # greedy no-split whole-document bins (fewer-truncations) —
-            # only over-length documents truncate
+            # only over-length documents truncate; assemble_bins' default
+            # bound keeps one pandas group O(BINS_MAX_DOCS_PER_STREAM)
             from .operators.packing import assemble_bins
 
             out = assemble_bins(

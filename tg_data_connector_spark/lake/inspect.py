@@ -132,7 +132,7 @@ def verify_table(
     """
     import os
 
-    from .table import bucket_expr
+    from .table import bucket_expr, read_parquet_files
 
     snap = snapshot or table.snapshot()
     fs = table.fs
@@ -200,8 +200,7 @@ def verify_table(
             "basename string, bucket int, rows_expected bigint",
         )
         scanned = (
-            table.spark.read.schema(f"`{key}` {ktype}")
-            .parquet(*paths)
+            read_parquet_files(table.spark, f"`{key}` {ktype}", paths)
             .select(
                 F.regexp_extract(F.input_file_name(), r"[^/]+$", 0
                                  ).alias("basename"),

@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import uuid
 import warnings
 from dataclasses import dataclass, field
@@ -46,6 +47,51 @@ BUCKET_HASH_ID = "murmur3_pmod"
 # Above this bucket count the per-bucket observe() metric list stops being
 # codegen-friendly; row counts then come from a DISTRIBUTED footer-read job.
 _OBSERVE_BUCKET_LIMIT = 512
+_LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# the threshold is session-wide: serialize the raise/restore between threads
+_LISTING_LOCK = threading.Lock()
+
+
+def read_parquet_files(
+    spark: SparkSession, schema_ddl: str, paths: list[str]
+) -> DataFrame:
+    """``spark.read.schema(schema_ddl).parquet(*paths)`` for files a manifest
+    lists, without Spark's distributed file-listing job on a local table.
+
+    The manifest already names every file, so Spark's listing of the paths
+    only re-stats known files; above the session's parallelPartitionDiscovery
+    threshold (default 32 paths) it does so in a job of one task per path.
+    Spark lists eagerly, when the DataFrame is built, so for local paths
+    (no scheme or ``file:``) the threshold is raised to ``len(paths)`` for
+    this one call and restored in ``finally`` (``unset`` when it was not set
+    before); the built DataFrame never lists again. On local disk the serial
+    listing wins at every size measured: 64 / 256 / 1024 / 4096 paths took
+    0.47 / 1.20 / 3.40 / 11.96 s as a job against 0.07 / 0.07 / 0.17 /
+    0.50 s on the driver (4-vCPU host, local[4], medians of 5). Remote
+    stores (hdfs, s3a, ...) keep Spark's setting: there serial listing makes
+    one metadata call per path, which was not measured.
+
+    The raised value is session-wide while the DataFrame is built: another
+    thread of the same session that lists paths in that window (a source
+    read, a streaming source) lists on the driver too, and a value it sets
+    for this key in that window is overwritten by the restore. The lock only
+    orders callers of this helper, so concurrent manifest reads list one
+    after another."""
+    from .fs import uri_scheme
+
+    reader = spark.read.schema(schema_ddl)
+    if not all(uri_scheme(p) in (None, "file") for p in paths):
+        return reader.parquet(*paths)
+    with _LISTING_LOCK:
+        prior = spark.conf.get(_LISTING_THRESHOLD_CONF, None)
+        spark.conf.set(_LISTING_THRESHOLD_CONF, str(len(paths)))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            if prior is None:
+                spark.conf.unset(_LISTING_THRESHOLD_CONF)
+            else:
+                spark.conf.set(_LISTING_THRESHOLD_CONF, prior)
 
 
 def _footer_info(arg: tuple[str, str]) -> tuple[int, object, object]:
@@ -938,6 +984,10 @@ class LakeTable:
         Files written under older schemas are read with their write-time schema
         and cast/null-filled up to the current schema (transactional widen /
         add-column, see ``evolve.py``).
+
+        The manifest is the listing: the scan reads exactly the files the
+        snapshot names, no directory is listed, and building the DataFrame
+        launches no Spark job (``read_parquet_files``).
         """
         snap = snapshot or self.snapshot()
         cur = snap.schema()
@@ -1074,6 +1124,8 @@ class LakeTable:
         schema (no inference), aligned (cast / null-fill / rename-resolve)
         up to ``target``, lineage columns included. None for an empty list.
         No tombstone filter and no delta resolution — callers layer those.
+        The entries are the file list: ``read_parquet_files`` keeps Spark's
+        re-listing of them on the driver, so no listing job runs.
 
         ``target_sid``: the schema id ``target`` corresponds to — needed to
         walk rename records back to each file's write-time name (omitted =
@@ -1095,7 +1147,7 @@ class LakeTable:
         for sid, paths in by_sid.items():
             wschema = TableSchema.from_json(schemas[str(sid)])
             read_schema = TableSchema(wschema.fields + lineage)
-            df = self.spark.read.schema(read_schema.ddl()).parquet(*paths)
+            df = read_parquet_files(self.spark, read_schema.ddl(), paths)
             cols = []
             have = dict(wschema.fields)
             for name, typ in target.fields:
@@ -1351,12 +1403,6 @@ class LakeTable:
         codec = self.meta().get("codec")
         if codec:
             writer = writer.option("compression", codec)
-        # A/B hook (tools/ab_parquet_dict.py): parquet dictionary encoding
-        # on/off for this write — the token arrays are near-uniform ints, so
-        # the dictionary build can be pure overhead; set from measurement
-        dict_knob = os.environ.get("SPARK_GRAFT_PARQUET_DICT", "")
-        if dict_knob in ("true", "false"):
-            writer = writer.option("parquet.enable.dictionary", dict_knob)
         if self.meta().get("bloom_key"):
             writer = writer.option(f"parquet.bloom.filter.enabled#{key}", "true")
             ndv = self.meta().get("bloom_ndv")

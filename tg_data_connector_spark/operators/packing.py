@@ -34,6 +34,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# assemble_bins' default bound on one pack_bins pandas group. Measured peak
+# Python-worker memory of one group (Arrow batch + pandas frame + the pack
+# arrays, 16-char string ids): ~330 B/doc, so 10^6 docs ~320 MiB per
+# concurrently packing worker. Sources at or below it pack as one stream
+# (output identical to an unbounded run); larger ones split into
+# ceil(docs / bound) sub-streams.
+BINS_MAX_DOCS_PER_STREAM = 1_000_000
+
 
 def pack_sequences(
     df: DataFrame,
@@ -253,17 +261,24 @@ def pack_bins(
         streams = {
             p: -(-c // max_docs_per_stream) for p, c in counts.items()
         }
-        k_map = F.create_map(
-            *[F.lit(x) for p, k in sorted(streams.items()) for x in (p, k)]
-        )
+        split = sorted((p, k) for p, k in streams.items()
+                       if p is not None and k > 1)
         # a part value missing from the counts (an upstream that changed
-        # between the count and the pack) packs as ONE stream, not NULL
+        # between the count and the pack) packs as ONE stream, not NULL;
+        # map keys cannot be NULL, so a NULL part gets its own branch
+        k_of = F.lit(1)
+        if split:
+            k_map = F.create_map(
+                *[F.lit(x) for p, k in split for x in (p, k)]
+            )
+            k_of = F.coalesce(k_map[F.col(part_col)], k_of)
+        if streams.get(None, 1) > 1:
+            k_of = F.when(
+                F.col(part_col).isNull(), F.lit(streams[None])
+            ).otherwise(k_of)
         slim = slim.withColumn(
             "_stream",
-            F.pmod(
-                F.xxhash64(F.col(id_col)),
-                F.coalesce(k_map[F.col(part_col)], F.lit(1)),
-            ).cast("bigint"),
+            F.pmod(F.xxhash64(F.col(id_col)), k_of).cast("bigint"),
         )
 
     def pack(key, pdf):
@@ -309,7 +324,7 @@ def assemble_bins(
     len_col: str = "n_tok",
     part_col: str = "source",
     order_col: str | None = None,
-    max_docs_per_stream: int | None = None,
+    max_docs_per_stream: int | None = BINS_MAX_DOCS_PER_STREAM,
 ) -> DataFrame:
     """Materialize `pack_bins`' assignment into actual training windows:
     one row per (part, bin) with the concatenated token array (each doc
@@ -324,6 +339,11 @@ def assemble_bins(
     the collected struct precisely so the aggregate needs no
     order-sensitive input (collect_list order is nondeterministic under
     retries; array_sort restores it deterministically).
+
+    ``max_docs_per_stream`` defaults to ``BINS_MAX_DOCS_PER_STREAM``, so one
+    pandas group stays bounded for any source size; sources at or below it
+    pack exactly as with None (one stream). The bound costs one per-source
+    count job when the plan is built.
     """
     asg = pack_bins(
         df, window, id_col=id_col, len_col=len_col,

@@ -18,6 +18,7 @@ as Column ops so every cast is codegen'd and the text scan prunes columns.
 
 from __future__ import annotations
 
+import codecs
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,9 +103,10 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
 _MAX_UNION_FILES = 32
 
 
-def _whole_file_lines(sc, files: list[str], skip: int):
+def _whole_file_lines(sc, files: list[str], skip: int, encoding: str):
     """ONE binaryFiles RDD over all objects; per-file decompress (gzip/bzip2/
-    deflate by extension) + decode + drop the first `skip` lines, executor-side."""
+    deflate by extension) + decode (``encoding``) + drop the first `skip`
+    lines, executor-side."""
 
     def decode(pair):
         path, content = pair
@@ -125,7 +127,7 @@ def _whole_file_lines(sc, files: list[str], skip: int):
         # semantics) — NOT str.splitlines(), which also breaks on \x0b/\x0c/
         # \x85/U+2028 etc. and would parse the same bytes into a DIFFERENT
         # row set than the <=_MAX_UNION_FILES textFile path
-        lines = data.decode("utf-8").split("\n")
+        lines = data.decode(encoding).split("\n")
         if lines and lines[-1] == "":
             lines.pop()  # trailing newline is a terminator, not an empty row
         for i, line in enumerate(lines):
@@ -137,7 +139,13 @@ def _whole_file_lines(sc, files: list[str], skip: int):
     ).flatMap(decode)
 
 
-def _lines_skipping(spark: SparkSession, path: str, skip: int, compression: str | None):
+def _lines_skipping(
+    spark: SparkSession,
+    path: str,
+    skip: int,
+    compression: str | None,
+    encoding: str,
+):
     """Per-file line stream with the first `skip` lines of EACH file dropped —
     the reference's skipHeader/line-skip (``UnstructuredStorageReaderUtil.java:
     239-313``) which Spark's CSV reader cannot express (its `skipRows` option
@@ -149,7 +157,14 @@ def _lines_skipping(spark: SparkSession, path: str, skip: int, compression: str 
     DAG shape: few files -> one splittable textFile+zipWithIndex per file
     (large files parallelize across their blocks); many files (or zip) -> ONE
     whole-file RDD over every object, so the driver plan stays O(1) RDDs at
-    10^5 objects instead of O(files) union nodes."""
+    10^5 objects instead of O(files) union nodes.
+
+    Every whole-file pass decodes with ``encoding`` (the reference's reader
+    charset, ``UnstructuredStorageReaderUtil.java:144-155``). ``textFile``
+    always decodes UTF-8, so other encodings take the whole-file pass even
+    for few files. The cost: such a file is read by one task, whole, in one
+    Python worker, so a large non-UTF-8 file no longer splits across its
+    blocks (a multi-GB file needs that much worker memory)."""
     sc = spark.sparkContext
     files = _list_files(spark, path)
     if compression == "zip":
@@ -162,7 +177,7 @@ def _lines_skipping(spark: SparkSession, path: str, skip: int, compression: str 
                 for member in zf.namelist():
                     with zf.open(member) as fh:
                         for i, line in enumerate(
-                            io.TextIOWrapper(fh, encoding="utf-8")
+                            io.TextIOWrapper(fh, encoding=encoding)
                         ):
                             if i >= skip:
                                 yield line.rstrip("\r\n")
@@ -187,7 +202,7 @@ def _lines_skipping(spark: SparkSession, path: str, skip: int, compression: str 
                 else hadoop_snappy_decompress
             )
             data = fn(bytes(content))
-            lines = data.decode("utf-8").split("\n")
+            lines = data.decode(encoding).split("\n")
             if lines and lines[-1] == "":
                 lines.pop()
             for i, line in enumerate(lines):
@@ -197,8 +212,9 @@ def _lines_skipping(spark: SparkSession, path: str, skip: int, compression: str 
         return sc.binaryFiles(
             ",".join(files), minPartitions=min(len(files), sc.defaultParallelism)
         ).flatMap(unsnap)
-    if len(files) > _MAX_UNION_FILES:
-        return _whole_file_lines(sc, files, skip)
+    utf8 = codecs.lookup(encoding).name == "utf-8"
+    if len(files) > _MAX_UNION_FILES or not utf8:
+        return _whole_file_lines(sc, files, skip, encoding)
     rdds = []
     for f in files:
         rdds.append(
@@ -244,7 +260,7 @@ def _raw_csv(
         # columns are positional (_c0.. — exactly how index-typed entries
         # address them anyway)
         eff_skip = skip_lines + (1 if header else 0)
-        lines = _lines_skipping(spark, path, eff_skip, compression)
+        lines = _lines_skipping(spark, path, eff_skip, compression, encoding)
         reader = spark.read.option("header", False)
         header = False
     else:
@@ -317,7 +333,11 @@ def read_typed_csv(
     deflate decode transparently); "zip" = archive members decompressed in a
     per-file pass; "hadoop-snappy"/"framing-snappy" = container formats
     decoded per object by sources/snappy_codec.py; lzo variants are REJECTED
-    explicitly (no codec in this environment) rather than silently ignored."""
+    explicitly (no codec in this environment) rather than silently ignored.
+
+    ``skip_lines``/``header`` with a non-UTF-8 ``encoding`` read each file
+    whole in one task (see ``_lines_skipping``): correct decoding, but a
+    large file is not split across its blocks."""
     flagged = read_typed_csv_flagged(
         spark, path, entries, header=header, sep=sep, encoding=encoding,
         null_format=null_format, skip_lines=skip_lines, compression=compression,
