@@ -6,8 +6,10 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total suite sec>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ...,
    "replay": {"events": N, "seconds": s, "events_per_sec": r},
-   "scaling": {"cores_n": 8, "cores_4n": 32, "eps_n": ..., "eps_4n": ...,
-               "efficiency": ...}}
+   "scaling": {"cores_n": 1, "cores_4n": 4, "eps_n": ..., "eps_4n": ...,
+               "efficiency": ..., "wide": {...},
+               "probe": {"thresh_s": ..., "primary": {"probe_secs": [...],
+                         "block_clean": [...], "verdict": "clean"}, ...}}}
 
 Modes:
   bench.py                       full suite (default)
@@ -95,20 +97,11 @@ def run_replay(staging: str, cores: int, batches: int = 1) -> dict:
     from tg_data_connector_spark.lake import LakeTable, TableSchema
     from tg_data_connector_spark.session import get_spark
 
-    extra_conf = {"spark.sql.adaptive.enabled": "false"}
-    # A/B hook (tools/ab_parquet_v2.py): parquet writer format version for
-    # every file this worker writes. v2 pages use DELTA_BINARY_PACKED for
-    # ints — a candidate win for token-array data files. Unset -> v1 default.
-    pw = os.environ.get("SPARK_GRAFT_PARQUET_WRITER", "")
-    if pw:
-        extra_conf["spark.hadoop.parquet.writer.version"] = {
-            "v1": "PARQUET_1_0", "v2": "PARQUET_2_0",
-        }[pw]
     spark = get_spark(
         app_name=f"bench_replay_{cores}",
         master=f"local[{cores}]",
         shuffle_partitions=max(cores, 16),
-        extra_conf=extra_conf,
+        extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     log = spark.read.parquet(f"{staging}/changelog")
     seed = spark.read.parquet(f"{staging}/seed")
@@ -132,21 +125,11 @@ def run_replay(staging: str, cores: int, batches: int = 1) -> dict:
     # must run the identical logical workload
     table = LakeTable.create(
         spark, f"{root}/seq", TableSchema(SEQ_FIELDS), key="doc_id", n_buckets=32,
-        # A/B hook (tools/ab_codec.py): per-table parquet codec; empty -> the
-        # session default (snappy)
-        codec=os.environ.get("SPARK_GRAFT_TABLE_CODEC") or None,
     )
     table.append(seed)
-    # A/B hook for the winner-join strategy (tools/ab_winner_join.py): the
-    # switch threshold is SET from interleaved forced-variant samples on
-    # this exact input shape, so the worker must be forceable per-run — a
-    # threshold of 0 forces the shuffle join, 2**62 the broadcast.
     cfg = ReplayConfig(
         events_per_batch=max(1, n_events // batches), parse_payload=True
     )
-    force = os.environ.get("SPARK_GRAFT_FORCE_WINNER_JOIN", "")
-    if force in ("broadcast", "shuffle"):
-        cfg.broadcast_winners_max_keys = 2**62 if force == "broadcast" else 0
     eng = ReplayEngine(spark, table, cfg)
     t0 = time.time()
     reports = eng.replay(log, run_id="bench", bounds=bounds)
@@ -256,57 +239,74 @@ def main() -> None:
     # it gets more draws; sample counts stay outcome-independent.
     SAMPLES_N = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES_N", "2"))
     SAMPLES_4N = int(os.environ.get("SPARK_GRAFT_BENCH_SAMPLES_4N", "7"))
-    runs_n, runs_4n = [], []
-    for k in range(max(SAMPLES_N, SAMPLES_4N)):
-        if k < SAMPLES_4N:
-            runs_4n.append(worker(N4_LANES))
-        if k < SAMPLES_N:
-            runs_n.append(worker(N_LANES))
+    WIDE_PAIRS = int(os.environ.get("SPARK_GRAFT_BENCH_WIDE_PAIRS", "2"))
+    PROBE_MAX = int(os.environ.get("SPARK_GRAFT_BENCH_PROBE_MAX", "5"))
+    PROBE_THRESH = float(os.environ.get("SPARK_GRAFT_PROBE_THRESH", "30"))
+
+    # PROBE-GATED SAME-WINDOW sampling (round-4 verdict directive: a
+    # cross-window pairing under-reported the engine by ~4x). The host
+    # degrades stochastically for long stretches and cheap canaries cannot
+    # see it (BASELINE.md diagnostics); the only reliable probe is a short
+    # real replay at 4N lanes on a ~1/10-size staged input.
+    pn_events = max(200_000, n_events // 10)
+    pn_docs = max(20_000, pn_events // 10)
+    probe_staging = f"/tmp/tg_bench_cache_{GEN_VERSION}_{pn_events}_{pn_docs}"
+    if not os.path.exists(f"{probe_staging}/bounds.json"):
+        stage_replay_input(probe_staging, pn_events, pn_docs)
+
+    def probe_gated(n_blocks: int, take) -> tuple[list, dict]:
+        """Take ``n_blocks`` blocks of back-to-back samples (``take(k)``),
+        each right after a probe that ran under PROBE_THRESH seconds. A
+        degraded probe waits 45 s and probes again; once PROBE_MAX degraded
+        probes are spent, the remaining blocks run unvetted, so the sample
+        count never depends on the host. The verdict is "clean" only when
+        every block followed a clean probe."""
+        blocks, secs, vetted, misses = [], [], [], 0
+        for k in range(n_blocks):
+            clean = False
+            while misses < PROBE_MAX:
+                p = worker(N4_LANES, timeout=240, stage_dir=probe_staging)
+                secs.append(round(p["seconds"], 2) if p else None)
+                clean = p is not None and p["seconds"] < PROBE_THRESH
+                if clean:
+                    break
+                misses += 1
+                time.sleep(45)  # bad window: cheap wait, probe again
+            vetted.append(clean)
+            blocks.append(take(k))
+        verdict = "clean" if all(vetted) else "degraded"
+        return blocks, {"probe_secs": secs, "block_clean": vetted,
+                        "verdict": verdict}
+
+    # primary pair: blocks interleave [4N, N], the N sample only while
+    # SAMPLES_N lasts
+    def primary_block(k: int) -> tuple:
+        a = worker(N4_LANES) if k < SAMPLES_4N else None
+        n = worker(N_LANES) if k < SAMPLES_N else None
+        return a, n
+
+    blocks, probe_primary = probe_gated(
+        max(SAMPLES_N, SAMPLES_4N), primary_block
+    )
+    runs_4n = [a for a, _ in blocks[:SAMPLES_4N]]
+    runs_n = [n for _, n in blocks[:SAMPLES_N]]
+    probe = {"thresh_s": PROBE_THRESH, "primary": probe_primary}
     timeouts = sum(r is None for r in runs_n + runs_4n)
     runs_n = [r for r in runs_n if r]
     runs_4n = [r for r in runs_4n if r]
     if not runs_n or not runs_4n:
         raise RuntimeError("all samples of a scaling level timed out")
 
-    # Wide pair (4N -> TOP lanes), PROBE-GATED SAME-WINDOW (round-4 verdict
-    # directive: a cross-window pairing under-reported the engine by ~4x).
-    # The host degrades stochastically for long stretches and cheap canaries
-    # cannot see it (BASELINE.md diagnostics); the only reliable probe is a
-    # short real replay. Each attempt: probe at 4N lanes on a ~1/10-size
-    # staged input; when the probe runs clean, spend THAT window on a wide
-    # sample and a 4N anchor back-to-back and pair them. If no clean window
-    # appears within the budget, one unconditional back-to-back pair is
-    # taken so the record always holds a same-window figure (flagged).
-    WIDE_PAIRS = int(os.environ.get("SPARK_GRAFT_BENCH_WIDE_PAIRS", "2"))
-    PROBE_MAX = int(os.environ.get("SPARK_GRAFT_BENCH_PROBE_MAX", "5"))
-    PROBE_THRESH = float(os.environ.get("SPARK_GRAFT_PROBE_THRESH", "30"))
-    wide_pairs, wide_probe_secs, probe_gated = [], [], True
+    # Wide pair (4N -> TOP lanes): each block is a wide sample and a 4N
+    # anchor back-to-back in one probe-vetted window, paired.
+    wide_pairs = []
     if TOP_LANES > N4_LANES and WIDE_PAIRS > 0:
-        pn_events = max(200_000, n_events // 10)
-        pn_docs = max(20_000, pn_events // 10)
-        probe_staging = f"/tmp/tg_bench_cache_{GEN_VERSION}_{pn_events}_{pn_docs}"
-        if not os.path.exists(f"{probe_staging}/bounds.json"):
-            stage_replay_input(probe_staging, pn_events, pn_docs)
-        attempts = 0
-        while len(wide_pairs) < WIDE_PAIRS and attempts < PROBE_MAX:
-            attempts += 1
-            p = worker(N4_LANES, timeout=240, stage_dir=probe_staging)
-            wide_probe_secs.append(
-                round(p["seconds"], 2) if p else None
-            )
-            if p is None or p["seconds"] >= PROBE_THRESH:
-                time.sleep(45)  # bad window: cheap wait, probe again
-                continue
-            w = worker(TOP_LANES, timeout=720)
-            a = worker(N4_LANES, timeout=720)
-            if w and a:
-                wide_pairs.append((w, a))
-        if not wide_pairs:
-            probe_gated = False  # budget spent without a clean window
-            w = worker(TOP_LANES, timeout=720)
-            a = worker(N4_LANES, timeout=720)
-            if w and a:
-                wide_pairs.append((w, a))
+        blocks, probe["wide"] = probe_gated(
+            WIDE_PAIRS,
+            lambda k: (worker(TOP_LANES, timeout=720),
+                       worker(N4_LANES, timeout=720)),
+        )
+        wide_pairs = [(w, a) for w, a in blocks if w and a]
 
     def best(rs):
         return min(rs, key=lambda r: r["seconds"])
@@ -345,8 +345,8 @@ def main() -> None:
                 [round(w["seconds"], 2), round(a["seconds"], 2)]
                 for w, a in wide_pairs
             ],
-            "probe_gated": probe_gated,
-            "probe_secs": wide_probe_secs,
+            "probe_gated": probe["wide"]["verdict"] == "clean",
+            "probe_secs": probe["wide"]["probe_secs"],
             "samples_sec_4n": [round(r["seconds"], 2) for r in runs_4n],
             "note": "efficiency is the best SAME-WINDOW 4N->wide pair "
                     "(probe-vetted); host delivers ~4 honest threads in "
@@ -383,6 +383,7 @@ def main() -> None:
                     "samples_sec_4n": [round(r["seconds"], 2) for r in runs_4n],
                     "samples_timed_out": timeouts,
                     "wide": wide,
+                    "probe": probe,
                 },
             }
         )

@@ -619,6 +619,41 @@ def test_training_export_bins_packing(spark, tmp_path):
         })
 
 
+def test_training_export_bins_keeps_null_source_docs(spark, tmp_path):
+    """Docs with a NULL part value (source) get bins and reach the bins
+    output with their tokens: 6 docs, 3 NULL-source, give 6 docs under the
+    job's default bound, unbounded, and with a bound that splits streams."""
+    from tg_data_connector_spark.operators.packing import assemble_bins
+
+    sources = ["web", None, "web", None, "wiki", None]
+    rows = [(s, f"d{i}", list(range(10 * i, 10 * i + 5)))
+            for i, s in enumerate(sources)]
+    df = spark.createDataFrame(
+        [(s, d, t, len(t)) for s, d, t in rows],
+        "source string, doc_id string, tokens array<int>, n_tok int",
+    )
+    want = sorted(t for _, _, toks in rows for t in toks)
+
+    def docs_and_tokens(bins):
+        got = bins.collect()
+        return (sum(r["n_docs"] for r in got),
+                sorted(t for r in got for t in r["tokens"]))
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "exp")
+    df.write.parquet(src)
+    run_job(spark, {
+        "reader": {"type": "parquet", "path": src},
+        "writer": {"type": "training_export", "path": out, "shards": 2,
+                   "window": 64, "packing": "bins"},
+    })
+    back = spark.read.parquet(out)
+    assert docs_and_tokens(back) == (6, want)
+    assert back.where(F.col("source").isNull()).count() >= 1
+    for bound in (None, 2):
+        bins = assemble_bins(df, 64, max_docs_per_stream=bound)
+        assert docs_and_tokens(bins) == (6, want), bound
+
+
 def test_merge_into_job_validation_and_run(spark, tmp_path):
     """writeMode=mergeInto surface: requires an existing table and a merge
     clause object; pre_check flags bad clause SQL without running; a valid

@@ -300,12 +300,11 @@ def test_lake_table_on_hadoop_fs(spark, tmp_path):
 
 
 def test_table_codec_overrides_session_default(spark, tmp_path):
-    """Per-table parquet codec (create(codec=...)): data files carry the
-    codec's suffix and read back identically; the _meta.json record makes
-    every writer of the table agree regardless of its session default."""
+    """Data files are zstd whatever the session's parquet codec (snappy
+    here): they carry the codec's suffix and read back identically, and
+    every writer of the table agrees."""
     t = LakeTable.create(
         spark, str(tmp_path / "t"), SCHEMA, key="doc_id", n_buckets=4,
-        codec="zstd",
     )
     t.append(_seed(spark))
     paths = [f["path"] for f in t.snapshot().files]

@@ -318,21 +318,6 @@ def _bloom_offsets(spark, table):
     return out
 
 
-def test_bloom_key_writes_filters_and_lookup_parity(spark, tmp_path):
-    t = LakeTable.create(
-        spark, str(tmp_path / "b"), SCHEMA, key="doc_id",
-        n_buckets=4, bloom_key=True, bloom_ndv=256,
-    )
-    rows = [(d, tok, len(tok), s) for d, tok, _, s in _rows(300)]
-    t.append(spark.createDataFrame(rows, SCHEMA.ddl()),
-             lsn_col=F.lit(1), seq_col=F.lit(0))
-    offs = _bloom_offsets(spark, t)
-    assert offs and all(off >= 0 for _, off in offs)
-    keys = ["doc-000007", "doc-000123", "missing"]
-    got = sorted(r.doc_id for r in t.lookup(keys).collect())
-    assert got == ["doc-000007", "doc-000123"]
-
-
 def test_no_bloom_by_default(spark, tmp_path):
     t = _make(spark, str(tmp_path / "nb"), n=100, n_buckets=4)
     offs = _bloom_offsets(spark, t)

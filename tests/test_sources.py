@@ -419,6 +419,30 @@ def test_latin1_whole_file_paths_honour_encoding(spark, tmp_path):
         assert dirty.count() == 0
 
 
+def test_python_codec_names_read_without_skip(spark, tmp_path):
+    """Python codec names work on the plain (no skip, no header) path:
+    latin-1 and ascii map to the names Spark's CSV reader takes; charsets
+    its line reader cannot split (utf-16) or does not know (cp1252) decode
+    in the whole-file pass; an unknown name fails pre_check."""
+    from tg_data_connector_spark.job import pre_check
+
+    entries = [ColumnEntry(type="long", index=0, name="id"),
+               ColumnEntry(type="string", index=1, name="v")]
+    for enc, text in (("latin-1", "café"), ("ascii", "cafe"),
+                      ("utf_16_le", "café"), ("cp1252", "café €")):
+        p = tmp_path / f"{enc}.csv"
+        p.write_bytes(f"1,{text}\n2,{text}2\n".encode(enc))
+        clean, dirty = read_typed_csv(spark, str(p), entries, encoding=enc)
+        got = sorted((r["id"], r["v"]) for r in clean.collect())
+        assert got == [(1, text), (2, f"{text}2")], enc
+        assert dirty.count() == 0
+    problems = pre_check(spark, {
+        "reader": {"type": "csv", "path": str(p), "encoding": "no-such"},
+        "writer": {"type": "console"},
+    })
+    assert any("unknown encoding 'no-such'" in m for m in problems)
+
+
 def test_snappy_codec_property_roundtrip():
     """Property: decompress(compress(x)) == x for both containers across
     arbitrary byte payloads and chunk/block sizes (hypothesis)."""

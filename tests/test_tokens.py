@@ -1,5 +1,8 @@
 """Vocab-maintenance operators: remap_vocab (expr vs arrow parity, OOV,
-nulls, schema preservation), token_histogram, shard_shuffle determinism."""
+nulls, schema preservation), token_histogram, shard_shuffle determinism.
+
+The expr/arrow kernels are chosen from the input: a dense id space takes
+the literal-array expr kernel, one past the dense cap takes Arrow."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,6 +10,7 @@ from pyspark.sql import types as T
 
 from tg_data_connector_spark.operators.packing import shard_shuffle
 from tg_data_connector_spark.operators.tokens import (
+    _remap_arrow,
     chunk_sequences,
     remap_vocab,
     token_contamination_flags,
@@ -31,30 +35,33 @@ def _docs(spark, rows, elem="int"):
 
 
 MAPPING = {1: 101, 2: 202, 3: 303, 7: 707}
+# MAPPING plus one id past the dense cap that no test document carries: the
+# same answers, computed by the Arrow kernel
+MAPPINGS = {"expr": MAPPING, "arrow": {**MAPPING, 70_000: 0}}
 
 
-@pytest.mark.parametrize("strategy", ["expr", "expr_map", "arrow"])
-def test_remap_basic_and_oov(spark, strategy):
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _remap(df, kernel, unk_id):
+    out = remap_vocab(df, MAPPINGS[kernel], unk_id=unk_id)
+    assert ("MapInArrow" in _plan(out)) == (kernel == "arrow")
+    return {r["doc_id"]: r["tokens"] for r in out.collect()}
+
+
+@pytest.mark.parametrize("kernel", ["expr", "arrow"])
+def test_remap_basic_and_oov(spark, kernel):
     df = _docs(spark, [(1, [1, 2, 9, 3]), (2, [7, 7, 0])])
-    out = {
-        r["doc_id"]: r["tokens"]
-        for r in remap_vocab(
-            df, MAPPING, unk_id=-1, strategy=strategy
-        ).collect()
-    }
+    out = _remap(df, kernel, unk_id=-1)
     assert out[1] == [101, 202, -1, 303]
     assert out[2] == [707, 707, -1]
 
 
-@pytest.mark.parametrize("strategy", ["expr", "expr_map", "arrow"])
-def test_remap_nulls_and_empty(spark, strategy):
+@pytest.mark.parametrize("kernel", ["expr", "arrow"])
+def test_remap_nulls_and_empty(spark, kernel):
     df = _docs(spark, [(1, []), (2, None), (3, [2])])
-    out = {
-        r["doc_id"]: r["tokens"]
-        for r in remap_vocab(
-            df, MAPPING, unk_id=0, strategy=strategy
-        ).collect()
-    }
+    out = _remap(df, kernel, unk_id=0)
     assert out[1] == []
     assert out[2] is None
     assert out[3] == [202]
@@ -66,8 +73,9 @@ def test_remap_strategies_agree_on_wide_vocab(spark):
         (i, [(i * 13 + j * 7) % 1100 for j in range(20)]) for i in range(200)
     ]
     df = _docs(spark, rows).repartition(4)
-    a = remap_vocab(df, mapping, unk_id=0, strategy="expr")
-    b = remap_vocab(df, mapping, unk_id=0, strategy="arrow")
+    a = remap_vocab(df, mapping, unk_id=0)  # dense: the expr kernel
+    b = _remap_arrow(df, mapping, "tokens", 0)
+    assert "MapInArrow" not in _plan(a)
     assert a.schema == b.schema == df.schema
     ra = {r["doc_id"]: r["tokens"] for r in a.collect()}
     rb = {r["doc_id"]: r["tokens"] for r in b.collect()}
@@ -75,29 +83,29 @@ def test_remap_strategies_agree_on_wide_vocab(spark):
 
 
 def test_remap_auto_picks_by_dense_feasibility(spark):
-    """Auto rule from the round-4 A/B: dense literal-array LUT (codegen,
+    """Kernel rule from the round-4 A/B: dense literal-array LUT (codegen,
     no Python workers) whenever the id space fits 64k slots; the Arrow
     kernel for id spaces the plan literal can't hold (too wide or sparse
-    high ids)."""
+    high ids). Negative ids raise."""
     df = _docs(spark, [(1, [1])])
-    plan = lambda d: d._jdf.queryExecution().executedPlan().toString()
-    small = remap_vocab(df, {1: 2}, strategy="auto")
-    mid = remap_vocab(df, {v: v for v in range(600)}, strategy="auto")
-    assert "ArrowEvalPython" not in plan(small)
-    assert "MapInArrow" not in plan(small) and "MapInArrow" not in plan(mid)
-    wide = remap_vocab(
-        df, {v: v for v in range(70_000)}, strategy="auto"
-    )
-    sparse_high = remap_vocab(df, {10_000_000: 3}, strategy="auto")
-    assert "MapInArrow" in plan(wide)
-    assert "MapInArrow" in plan(sparse_high)
+    small = remap_vocab(df, {1: 2})
+    mid = remap_vocab(df, {v: v for v in range(600)})
+    assert "ArrowEvalPython" not in _plan(small)
+    assert "MapInArrow" not in _plan(small) and "MapInArrow" not in _plan(mid)
+    wide = remap_vocab(df, {v: v for v in range(70_000)})
+    sparse_high = remap_vocab(df, {10_000_000: 3})
+    assert "MapInArrow" in _plan(wide)
+    assert "MapInArrow" in _plan(sparse_high)
+    with pytest.raises(ValueError, match="non-negative"):
+        remap_vocab(df, {-1: 3, 1: 2})
 
 
 def test_remap_long_elem_type_preserved(spark):
     df = _docs(spark, [(1, [1, 5])], elem="long")
-    out = remap_vocab(df, MAPPING, unk_id=9, strategy="arrow")
-    assert out.schema["tokens"].dataType.elementType == T.LongType()
-    assert out.collect()[0]["tokens"] == [101, 9]
+    for mapping in MAPPINGS.values():
+        out = remap_vocab(df, mapping, unk_id=9)
+        assert out.schema["tokens"].dataType.elementType == T.LongType()
+        assert out.collect()[0]["tokens"] == [101, 9]
 
 
 def test_token_histogram_counts(spark):
@@ -289,11 +297,26 @@ def _nll_rows(df):
     }
 
 
-@pytest.mark.parametrize("strategy", ["expr", "expr_map", "arrow"])
-def test_unigram_logprob_hand_computed(spark, strategy):
+def _smoothed(counts, alpha=0.5):
+    """unigram_logprob's smoothing: (ln p per id, OOV ln p)."""
     import math
 
-    from tg_data_connector_spark.operators.tokens import unigram_logprob
+    denom = sum(counts.values()) + alpha * (len(counts) + 1)
+    logp = {t: math.log((c + alpha) / denom) for t, c in counts.items()}
+    return logp, math.log(alpha / denom)
+
+
+@pytest.mark.parametrize("kernel", ["expr", "arrow"])
+def test_unigram_logprob_hand_computed(spark, kernel):
+    """The dense vocab takes the expr kernel through the public function;
+    an extra vocab id would change the smoothing, so the Arrow kernel is
+    called directly on the same hand-computed log-probs."""
+    import math
+
+    from tg_data_connector_spark.operators.tokens import (
+        _unigram_arrow,
+        unigram_logprob,
+    )
 
     # vocab: {1: 3, 2: 1}; total=4, V=2, denom = 4 + 0.5*3 = 5.5
     counts = {1: 3, 2: 1}
@@ -301,7 +324,12 @@ def test_unigram_logprob_hand_computed(spark, strategy):
     lp2 = math.log(1.5 / 5.5)
     oov = math.log(0.5 / 5.5)
     df = _docs(spark, [(1, [1, 1, 2]), (2, [9]), (3, []), (4, None)])
-    out = _nll_rows(unigram_logprob(df, counts, strategy=strategy))
+    if kernel == "expr":
+        scored = unigram_logprob(df, counts)
+        assert "MapInArrow" not in _plan(scored)
+    else:
+        scored = _unigram_arrow(df, {1: lp1, 2: lp2}, oov, "tokens", "nll")
+    out = _nll_rows(scored)
     assert out[1] == round(-(2 * lp1 + lp2) / 3, 9)
     assert out[2] == round(-oov, 9)  # OOV id scores the smoothing floor
     assert out[3] is None and out[4] is None  # unscorable stays NULL
@@ -310,7 +338,10 @@ def test_unigram_logprob_hand_computed(spark, strategy):
 def test_unigram_logprob_strategies_agree(spark):
     import random
 
-    from tg_data_connector_spark.operators.tokens import unigram_logprob
+    from tg_data_connector_spark.operators.tokens import (
+        _unigram_arrow,
+        unigram_logprob,
+    )
 
     rng = random.Random(7)
     rows = [
@@ -319,8 +350,8 @@ def test_unigram_logprob_strategies_agree(spark):
     ]
     df = _docs(spark, rows).repartition(8)
     counts = {t: rng.randrange(1, 50) for t in range(0, 2000, 3)}
-    a = _nll_rows(unigram_logprob(df, counts, strategy="expr"))
-    b = _nll_rows(unigram_logprob(df, counts, strategy="arrow"))
+    a = _nll_rows(unigram_logprob(df, counts))  # dense: the expr kernel
+    b = _nll_rows(_unigram_arrow(df, *_smoothed(counts), "tokens", "nll"))
     assert len(counts) > 512  # non-trivial vocab: parity is meaningful
     for k in a:
         assert a[k] == pytest.approx(b[k], rel=1e-9, abs=1e-12)
@@ -354,8 +385,9 @@ def test_unigram_logprob_is_map_only(spark):
     from tg_data_connector_spark.operators.tokens import unigram_logprob
 
     df = _docs(spark, [(1, [1, 2]), (2, [3])]).repartition(4)
-    out = unigram_logprob(df, {t: 1 for t in range(1000)})  # arrow path
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    out = unigram_logprob(df, {t: 1 for t in range(20_000)})  # arrow path
+    plan = _plan(out)
+    assert "MapInArrow" in plan
     assert "Exchange" not in plan.replace("Exchange RoundRobin", "", 1)
 
 
@@ -373,8 +405,7 @@ def test_bigram_histogram_counts_and_boundaries(spark):
     assert bigram_histogram(df, min_count=3).count() == 0
 
 
-@pytest.mark.parametrize("strategy", ["expr", "expr_map", "arrow"])
-def test_bigram_logprob_hand_computed(spark, strategy):
+def test_bigram_logprob_hand_computed(spark):
     import math
 
     from tg_data_connector_spark.operators.tokens import bigram_logprob
@@ -387,7 +418,7 @@ def test_bigram_logprob_hand_computed(spark, strategy):
     df = _docs(spark, [(1, [1, 2, 1]), (2, [9, 1]), (3, []), (4, None)])
     out = {
         r["doc_id"]: r["nll"]
-        for r in bigram_logprob(df, bi, uni, lam=lam, strategy=strategy).collect()
+        for r in bigram_logprob(df, bi, uni, lam=lam).collect()
     }
     # doc 1: ln u1 + ln(lam*2/2 + .3*u2) + ln(lam*1/1 + .3*u1)
     exp1 = -(
@@ -400,37 +431,6 @@ def test_bigram_logprob_hand_computed(spark, strategy):
     assert out[1] == pytest.approx(exp1, rel=1e-12)
     assert out[2] == pytest.approx(exp2, rel=1e-12)
     assert out[3] is None and out[4] is None
-
-
-def test_bigram_logprob_strategies_agree(spark):
-    import random
-
-    from tg_data_connector_spark.operators.tokens import (
-        bigram_histogram,
-        bigram_logprob,
-        token_histogram,
-    )
-
-    rng = random.Random(11)
-    rows = [
-        (i, [rng.randrange(0, 300) for _ in range(rng.randrange(1, 40))])
-        for i in range(150)
-    ]
-    df = _docs(spark, rows).repartition(8)
-    uni = {
-        int(r["token"]): int(r["n_occurrences"])
-        for r in token_histogram(df).collect()
-    }
-    bi = {
-        (int(r["prev"]), int(r["token"])): int(r["n"])
-        for r in bigram_histogram(df).collect()
-    }
-    a = bigram_logprob(df, bi, uni, strategy="expr")
-    b = bigram_logprob(df, bi, uni, strategy="arrow")
-    av = {r["doc_id"]: r["nll"] for r in a.collect()}
-    bv = {r["doc_id"]: r["nll"] for r in b.collect()}
-    for k in av:
-        assert av[k] == pytest.approx(bv[k], rel=1e-9, abs=1e-12)
 
 
 def test_bigram_logprob_is_map_only(spark):

@@ -3010,9 +3010,9 @@ def _spark_tokens():
 def q_token_vocab_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary migration over pre-tokenized sequences: ids divisible by 17
     are pruned from the vocab (→ unk 0), survivors move to a new id space via
-    a Knuth multiplicative hash. The 3855-entry mapping forces the Arrow
-    broadcast-LUT strategy (the 100-TB path); the expr path is pinned against
-    it in tests/test_tokens.py."""
+    a Knuth multiplicative hash. The 3855-entry mapping's ids fit the dense
+    literal-array LUT, so it takes the expr kernel; the Arrow kernel (ids
+    past the dense cap) is pinned against it in tests/test_tokens.py."""
     from .operators.tokens import remap_vocab
 
     docs = spark.read.parquet(_t(sf_dir, "documents"))

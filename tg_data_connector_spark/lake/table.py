@@ -551,36 +551,22 @@ class LakeTable:
         n_buckets: int = 16,
         fs=None,
         sort_on_write: bool = False,
-        codec: str | None = "zstd",
-        bloom_key: bool = False,
-        bloom_ndv: int | None = None,
         stats_cols: "list[str] | None" = None,
         cluster_cols: "list[str] | None" = None,
         cluster_method: "str | None" = None,
         resolution: str = "lww",
         agg_spec: "dict | None" = None,
     ) -> "LakeTable":
-        """``codec``: parquet compression for this table's data files
-        (recorded in _meta.json so every writer of the table agrees;
-        None = the session's codec). Default zstd, SET FROM DATA: the
-        replay's write phase is I/O-bound, and the interleaved bench A/B
-        (tools/ab_codec.py, BENCH.md round 4) measured zstd 1.5x faster
-        end-to-end than snappy (best-of-3: 52.0 s vs 79.7 s per 31.5M-event
-        batch at 4 lanes) and ~3x faster than parquet-lz4 — the same ratio
-        argument holds harder on a real DFS cluster where the written bytes
-        also cross the network and replicate.
-
-        ``bloom_key``: write a parquet BLOOM FILTER on the key column of
-        every data file (Iceberg's write.parquet.bloom-filter-enabled
-        analog). Pays on UNSORTED tables with point-lookup traffic: the
-        manifest's min/max stats cannot prune inside a hash bucket (a
-        bucket's key range spans the key space), but the pushed IN-filter
-        probes the bloom and skips whole row groups. Redundant when
-        ``sort_on_write`` already gives tight row-group ranges. Off by
-        default, SET FROM DATA: tools/ab_bloom.py / BENCH.md round 4.
-        ``bloom_ndv``: expected distinct keys PER FILE (sizes the bitset;
-        parquet's default 1M costs ~1.2 MB per file — set it to about
-        rows/n_buckets).
+        """Data files are written zstd, SET FROM DATA: the replay's write
+        phase is I/O-bound, and the interleaved round-4 bench A/B (BENCH.md
+        "table parquet codec A/B") measured zstd 1.5x faster end-to-end than
+        snappy (best-of-3: 52.0 s vs 79.7 s per 31.5M-event batch at 4
+        lanes) and ~3x faster than parquet-lz4. No parquet bloom filters are
+        written: in the round-4 lookup A/B (BENCH.md "parquet bloom
+        filters") they made point lookups ~8% faster and appends 2.5x
+        slower. Tables whose ``_meta.json`` still carries codec or bloom keys
+        from older writers read as before (each file records its own codec);
+        new files are zstd without blooms.
 
         ``stats_cols``: NON-key columns to record per-file min/max for in
         the manifest (Iceberg column-stats skipping beyond the key):
@@ -658,9 +644,6 @@ class LakeTable:
                     "buckets": n_buckets,
                     "bucket_hash": BUCKET_HASH_ID,
                     "sort_on_write": bool(sort_on_write),
-                    **({"codec": codec} if codec else {}),
-                    **({"bloom_key": True} if bloom_key else {}),
-                    **({"bloom_ndv": int(bloom_ndv)} if bloom_ndv else {}),
                     **({"stats_cols": list(stats_cols)} if stats_cols else {}),
                     **(
                         {"cluster_cols": list(cluster_cols)}
@@ -1399,18 +1382,9 @@ class LakeTable:
             order.append(key)
         if order:
             out_df = out_df.sortWithinPartitions("b", *order)
-        writer = out_df.write.partitionBy("b").mode("overwrite")
-        codec = self.meta().get("codec")
-        if codec:
-            writer = writer.option("compression", codec)
-        if self.meta().get("bloom_key"):
-            writer = writer.option(f"parquet.bloom.filter.enabled#{key}", "true")
-            ndv = self.meta().get("bloom_ndv")
-            if ndv:
-                writer = writer.option(
-                    f"parquet.bloom.filter.expected.ndv#{key}", str(int(ndv))
-                )
-        writer.parquet(out_path)
+        out_df.write.partitionBy("b").mode("overwrite").option(
+            "compression", "zstd"
+        ).parquet(out_path)
         bucket_rows = {}
         bucket_stats: dict[int, tuple] = {}
         if obs is not None:

@@ -333,8 +333,8 @@ def assemble_bins(
 
     Plan shape: the assignment runs over (id, len) ONLY — token arrays
     never cross the Python boundary. Tokens rejoin JVM-side by (part, id)
-    (one hash join), each doc's contribution is an expression-level
-    ``slice``, and ONE (part, bin) hash-aggregate collects
+    (one hash join, null-safe on the part), each doc's contribution is an
+    expression-level ``slice``, and ONE (part, bin) hash-aggregate collects
     (off, slice) structs, sorts by offset, and flattens — `off` is part of
     the collected struct precisely so the aggregate needs no
     order-sensitive input (collect_list order is nondeterministic under
@@ -350,9 +350,16 @@ def assemble_bins(
         part_col=part_col, order_col=order_col,
         max_docs_per_stream=max_docs_per_stream,
     )
-    toks = df.select(part_col, id_col, tokens_col)
-    joined = asg.join(toks, [part_col, id_col]).select(
-        part_col,
+    toks = df.select(
+        F.col(part_col).alias("_tpart"), F.col(id_col).alias("_tid"),
+        tokens_col,
+    )
+    joined = asg.join(
+        toks,
+        asg[part_col].eqNullSafe(toks["_tpart"])
+        & (asg[id_col] == toks["_tid"]),
+    ).select(
+        asg[part_col],
         "bin_id",
         F.struct(
             F.col("off"),

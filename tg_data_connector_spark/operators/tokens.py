@@ -21,7 +21,8 @@ Scale design:
     array into the plan and probe it with ``F.get`` (one O(1) GetArrayItem
     per token) so the whole remap stays inside whole-stage codegen with
     zero Python workers — measured faster than the Arrow kernel at every
-    size it can hold (strategy A/B notes below).
+    size it can hold (kernel-choice notes below). The choice is made from
+    the input alone; callers cannot force a kernel.
   * ``token_histogram`` is the one op that genuinely needs per-token
     aggregation; ``explode`` + groupBy is correct at scale because the
     hash-aggregate combines map-side — the shuffle carries one row per
@@ -30,45 +31,44 @@ Scale design:
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Strategy auto-rules, each set from the round-4 same-window interleaved A/B
+# Kernel choice, each rule set from the round-4 same-window interleaved A/B
 # (BENCH.md "LM/remap strategy A/B", 400k docs x ~40 tokens, 3 samples per
 # variant per size, local[8]):
 #
-#   * the literal-map probe (GetMapValue) is a LINEAR scan per token —
-#     0.8 s @ V=128 growing to 24.3 s @ V=8192 on the same corpus — so auto
-#     NEVER picks it; it survives only as the explicit-"expr" fallback for
-#     sparse/negative id spaces the dense array can't hold.
+#   * a literal-map probe (GetMapValue) is a LINEAR scan per token —
+#     0.8 s @ V=128 growing to 24.3 s @ V=8192 on the same corpus — so no
+#     kernel uses one.
 #   * remap_vocab: the dense literal-array LUT (O(1) F.get inside codegen,
 #     zero Python workers) won at EVERY measured size including the 64k cap
-#     (0.26-0.33 s vs Arrow's flat 0.47-0.51 s), so auto takes it whenever
-#     the id space fits; Arrow otherwise.
+#     (0.26-0.33 s vs Arrow's flat 0.47-0.51 s), so it is taken whenever the
+#     id space fits; Arrow otherwise.
 #   * unigram_logprob: dense expr won through 16384 slots (0.43-0.50 s vs
 #     0.58-0.60 s), tied at 32768, lost at 65536 (0.74 vs 0.55) — the plan
 #     literal's per-task cost grows with slots while the broadcast-numpy
-#     kernel stays flat. Auto switches to Arrow above 16384 slots.
+#     kernel stays flat. Arrow above 16384 slots.
 #   * bigram_logprob: Arrow (sorted packed-key searchsorted) won at every
-#     bigram-table size (0.59-0.67 s flat vs 1.3-6.3 s for the map probe),
-#     so auto is always Arrow.
+#     bigram-table size (0.59-0.67 s flat vs 1.3-6.3 s for the map probe;
+#     packed bigram keys are too sparse for a dense array), so it is the
+#     only kernel.
 
 # dense-LUT hard cap: 64k slots is a ~512 KB plan literal; beyond this (or
 # for sparse/negative id spaces) the broadcast-numpy Arrow path wins anyway.
 _DENSE_SLOT_CAP = 1 << 16
-# unigram auto crossover (slots): expr's clear-win region from the A/B.
+# unigram crossover (slots): expr's clear-win region from the A/B.
 _UNIGRAM_EXPR_AUTO_SLOTS = 16384
 
 
-def _dense_feasible(mapping, cap: int = _DENSE_SLOT_CAP) -> bool:
-    """True when the id space fits a dense literal-array LUT under ``cap``."""
-    return bool(mapping) and min(mapping) >= 0 and max(mapping) + 1 <= cap
-
-
 def _dense_expr_lut(
-    mapping: Mapping[int, float] | Mapping[int, int], default, np_dtype: str
+    mapping: Mapping[int, float] | Mapping[int, int],
+    default,
+    np_dtype: str,
+    cap: int = _DENSE_SLOT_CAP,
 ) -> "Column | None":
     """Literal dense array for O(1) ``F.get(lut, id)`` token lookups.
 
@@ -82,13 +82,10 @@ def _dense_expr_lut(
     target element type directly — no runtime ``.cast("array<...>")`` node
     around a 64k-slot literal inside the lambda.
 
-    Returns ``None`` when the id space has negative keys or would need more
-    than ``_DENSE_SLOT_CAP`` slots (callers fall back to the literal map /
-    Arrow paths).
+    Returns ``None`` when the id space is empty, has negative keys or would
+    need more than ``cap`` slots (callers fall back to the Arrow path).
     """
-    if not mapping:
-        return None
-    if min(mapping) < 0 or max(mapping) + 1 > _DENSE_SLOT_CAP:
+    if not mapping or min(mapping) < 0 or max(mapping) + 1 > cap:
         return None
     import numpy as np
 
@@ -111,71 +108,35 @@ def remap_vocab(
     mapping: Mapping[int, int],
     tokens_col: str = "tokens",
     unk_id: int = 0,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Rewrite every token id through ``mapping``; ids absent from the
     mapping (out-of-vocabulary after a prune) become ``unk_id``.
 
-    ``strategy``: ``"expr"`` inlines the mapping as a dense literal-array
-    LUT probed with ``F.get`` (codegen, no Python; falls back to a literal
-    map for sparse/negative id spaces); ``"expr_map"`` forces the literal
-    map (A/B + debugging only — GetMapValue is a linear scan per token);
-    ``"arrow"`` broadcasts a dense numpy LUT and gathers over the flat
-    Arrow buffer via ``mapInArrow`` (right for 64k-1M+ id spaces);
-    ``"auto"`` picks from the measured rule (module A/B notes).
+    An id space that fits ``_DENSE_SLOT_CAP`` slots is inlined as a dense
+    literal-array LUT probed with ``F.get`` (codegen, no Python); any other
+    (wider or sparse-high) broadcasts a dense numpy LUT and gathers over the
+    flat Arrow buffer via ``mapInArrow``. Negative ids raise ``ValueError``.
 
     The output keeps the input schema (element type included) so the remap
     composes with downstream packing/merge without a schema change.
     """
-    if strategy == "auto":
-        # dense literal-array LUT won at every measured size (see the A/B
-        # notes at the top of this module); Arrow only when it can't fit.
-        strategy = "expr" if _dense_feasible(mapping) else "arrow"
-    if strategy in ("expr", "expr_map"):
-        return _remap_expr(df, mapping, tokens_col, unk_id,
-                           force_map=strategy == "expr_map")
-    if strategy == "arrow":
-        return _remap_arrow(df, mapping, tokens_col, unk_id)
-    raise ValueError(f"unknown remap strategy {strategy!r}")
-
-
-def _remap_expr(
-    df: DataFrame,
-    mapping: Mapping[int, int],
-    tokens_col: str,
-    unk_id: int,
-    force_map: bool = False,
-) -> DataFrame:
     elem_t = df.schema[tokens_col].dataType.elementType.simpleString()
-    unk = F.lit(int(unk_id)).cast(elem_t)
     np_elem = {
         "tinyint": "int8", "smallint": "int16",
         "int": "int32", "bigint": "int64",
     }.get(elem_t)
-    lut = None if force_map or np_elem is None else _dense_expr_lut(
+    lut = None if np_elem is None else _dense_expr_lut(
         {int(k): int(v) for k, v in mapping.items()}, int(unk_id), np_elem
     )
-    if lut is not None:
-        n_slots = max(mapping) + 1
-
-        def look(t: Column) -> Column:
-            return F.coalesce(_dense_probe(lut, n_slots, t), unk)
-
-    else:
-        # sparse / negative / huge id space (or forced for A/B): literal map.
-        # GetMapValue is a linear scan per probe — acceptable only because
-        # auto routes real vocabs to the Arrow LUT.
-        pairs: list = []
-        for old, new in sorted(mapping.items()):
-            pairs.append(F.lit(int(old)).cast(elem_t))
-            pairs.append(F.lit(int(new)).cast(elem_t))
-        m = F.create_map(*pairs) if pairs else F.create_map()
-
-        def look(t: Column) -> Column:
-            return F.coalesce(m[t], unk)
-
+    if lut is None:
+        return _remap_arrow(df, mapping, tokens_col, unk_id)
+    n_slots = max(mapping) + 1
+    unk = F.lit(int(unk_id)).cast(elem_t)
     remapped = (
-        F.transform(F.col(tokens_col), look)
+        F.transform(
+            F.col(tokens_col),
+            lambda t: F.coalesce(_dense_probe(lut, n_slots, t), unk),
+        )
         .cast(df.schema[tokens_col].dataType)  # preserve containsNull exactly
         .alias(tokens_col)
     )
@@ -536,7 +497,6 @@ def unigram_logprob(
     tokens_col: str = "tokens",
     alpha: float = 0.5,
     out_col: str = "nll",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under a (smoothed) unigram
     language model — the standard cheap LM-quality score a training-data
@@ -553,18 +513,18 @@ def unigram_logprob(
     ``denom = total + alpha * (V + 1)``; OOV ids score ``ln(alpha / denom)``.
 
     Scale design (mirrors ``remap_vocab``): scoring is MAP-ONLY — no explode,
-    no join, no shuffle. Small vocabs inline a literal ``map<int,double>``
-    (whole-stage codegen); real vocabs broadcast a dense float64 LUT and the
-    per-document sum is one vectorized cumsum-diff over the flat Arrow values
-    buffer (no per-row or per-token Python). The naive explode + join + groupBy
-    plan shuffles the exploded corpus — at 100 TB that is the whole corpus
-    through the wire for a map-side-computable number.
+    no join, no shuffle. Vocabs whose ids fit ``_UNIGRAM_EXPR_AUTO_SLOTS``
+    inline a dense literal ``array<double>`` LUT (whole-stage codegen); wider
+    ones broadcast a dense float64 LUT and the per-document sum is one
+    vectorized cumsum-diff over the flat Arrow values buffer (no per-row or
+    per-token Python). An all-negative vocab raises ``ValueError``. The
+    naive explode + join + groupBy plan shuffles the exploded corpus — at
+    100 TB that is the whole corpus through the wire for a
+    map-side-computable number.
 
     Appends ``out_col`` (double): mean NLL in nats; NULL for empty or NULL
     token arrays (unscorable, caller decides policy).
     """
-    import math
-
     if counts is None:
         counts = {
             int(r["token"]): int(r["n_occurrences"])
@@ -576,48 +536,36 @@ def unigram_logprob(
     denom = total + alpha * (len(counts) + 1)
     logp = {t: math.log((c + alpha) / denom) for t, c in counts.items()}
     oov = math.log(alpha / denom)
-    if strategy == "auto":
-        # dense expr wins through 16384 slots, Arrow beyond (A/B notes at
-        # the top of this module).
-        strategy = (
-            "expr"
-            if _dense_feasible(logp, _UNIGRAM_EXPR_AUTO_SLOTS)
-            else "arrow"
+    # dense expr wins through 16384 slots, Arrow beyond (kernel-choice notes
+    # at the top of this module)
+    lut = _dense_expr_lut(logp, oov, "float64", cap=_UNIGRAM_EXPR_AUTO_SLOTS)
+    if lut is None:
+        return _unigram_arrow(df, logp, oov, tokens_col, out_col)
+    n_slots = max(logp) + 1
+    toks = F.col(tokens_col)
+    nll = F.when(
+        toks.isNotNull() & (F.size(toks) > 0),
+        -F.aggregate(
+            F.transform(
+                toks,
+                lambda t: F.coalesce(_dense_probe(lut, n_slots, t), F.lit(oov)),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
         )
-    if strategy in ("expr", "expr_map"):
-        lut = None if strategy == "expr_map" else _dense_expr_lut(
-            logp, oov, "float64"
-        )
-        if lut is not None:
-            n_slots = max(logp) + 1
+        / F.size(toks),
+    )
+    return df.withColumn(out_col, nll)
 
-            def lp_of(t: Column) -> Column:
-                return F.coalesce(_dense_probe(lut, n_slots, t), F.lit(oov))
 
-        else:
-            pairs: list = []
-            for t, lp in sorted(logp.items()):
-                pairs.append(F.lit(int(t)))
-                pairs.append(F.lit(float(lp)))
-            m = F.create_map(*pairs)
-
-            def lp_of(t: Column) -> Column:
-                return F.coalesce(m[t], F.lit(oov))
-
-        toks = F.col(tokens_col)
-        nll = F.when(
-            toks.isNotNull() & (F.size(toks) > 0),
-            -F.aggregate(
-                F.transform(toks, lp_of),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            / F.size(toks),
-        )
-        return df.withColumn(out_col, nll)
-    if strategy != "arrow":
-        raise ValueError(f"unknown unigram_logprob strategy {strategy!r}")
-
+def _unigram_arrow(
+    df: DataFrame,
+    logp: Mapping[int, float],
+    oov: float,
+    tokens_col: str,
+    out_col: str,
+) -> DataFrame:
+    """Broadcast float64 LUT + cumsum-diff over the flat Arrow buffer."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -709,7 +657,6 @@ def bigram_logprob(
     alpha: float = 0.5,
     lam: float = 0.7,
     out_col: str = "nll",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Interpolated bigram-LM quality score (the KenLM/CCNet-style
     perplexity filter, one order down): per-document mean negative
@@ -726,16 +673,13 @@ def bigram_logprob(
 
     Both count tables are vocab-bounded driver-side mappings (prune with
     ``bigram_histogram(min_count=...)`` for big corpora). Scoring is
-    MAP-ONLY: small tables inline literal maps (codegen); real tables
-    broadcast (a) a dense unigram prob LUT and (b) a SORTED packed-key
-    int64 array + value array, and the per-position bigram probe is one
-    vectorized ``np.searchsorted`` binary search over the flat Arrow
-    buffer — no explode, no join, no shuffle, no per-token Python.
+    MAP-ONLY: the tables broadcast as (a) a dense unigram prob LUT and (b) a
+    SORTED packed-key int64 array + value array, and the per-position bigram
+    probe is one vectorized ``np.searchsorted`` binary search over the flat
+    Arrow buffer — no explode, no join, no shuffle, no per-token Python.
 
     Appends ``out_col`` (double, NLL in nats); NULL for empty/NULL arrays.
     """
-    import math
-
     if not unigram_counts:
         raise ValueError("bigram_logprob: empty unigram vocabulary")
     total = float(sum(unigram_counts.values()))
@@ -749,69 +693,6 @@ def bigram_logprob(
         (p_ * _PACK + t): lam * c / ctx[p_]
         for (p_, t), c in bigram_counts.items()
     }
-    if strategy == "auto":
-        # Arrow won at EVERY measured bigram-table size (the packed bigram
-        # key space is inherently sparse, so the probe is a literal-map
-        # linear scan on the expr path vs a flat searchsorted on Arrow —
-        # A/B notes at the top of this module). expr stays available
-        # explicitly for plan-debugging only.
-        strategy = "arrow"
-    toks_c = F.col(tokens_col)
-    if strategy in ("expr", "expr_map"):
-        ulut = None if strategy == "expr_map" else _dense_expr_lut(
-            up, oov_p, "float64"
-        )
-        if ulut is not None:
-            n_slots = max(up) + 1
-
-            def u_of(t64: Column) -> Column:
-                return F.coalesce(
-                    _dense_probe(ulut, n_slots, t64), F.lit(float(oov_p))
-                )
-
-        else:
-            upairs: list = []
-            for t, p_v in sorted(up.items()):
-                upairs.append(F.lit(int(t)).cast("bigint"))
-                upairs.append(F.lit(float(p_v)))
-            um = F.create_map(*upairs)
-
-            def u_of(t64: Column) -> Column:
-                return F.coalesce(um[t64], F.lit(float(oov_p)))
-
-        # the bigram table stays a literal map: packed (prev*2^32 + cur)
-        # keys are inherently sparse, so a dense array is never feasible —
-        # auto routes real bigram tables to the Arrow searchsorted path.
-        bpairs: list = []
-        for k, v in sorted(bi.items()):
-            bpairs.append(F.lit(int(k)))
-            bpairs.append(F.lit(float(v)))
-        bm = F.create_map(*bpairs) if bpairs else None
-
-        def lp(t, i):
-            t64 = t.cast("bigint")
-            u = u_of(t64)
-            prev = F.element_at(toks_c, i).cast("bigint")  # 1-based == i-1
-            b = (
-                F.coalesce(bm[prev * F.lit(_PACK) + t64], F.lit(0.0))
-                if bm is not None
-                else F.lit(0.0)
-            )
-            return F.when(i == 0, F.ln(u)).otherwise(
-                F.ln(b + F.lit(1.0 - lam) * u)
-            )
-
-        nll = F.when(
-            toks_c.isNotNull() & (F.size(toks_c) > 0),
-            -F.aggregate(
-                F.transform(toks_c, lp), F.lit(0.0), lambda a, x: a + x
-            )
-            / F.size(toks_c),
-        )
-        return df.withColumn(out_col, nll)
-    if strategy != "arrow":
-        raise ValueError(f"unknown bigram_logprob strategy {strategy!r}")
-
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 

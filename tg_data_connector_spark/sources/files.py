@@ -226,6 +226,28 @@ def _lines_skipping(
     return sc.union(rdds) if len(rdds) > 1 else rdds[0]
 
 
+# Python's canonical codec name -> the charset name Spark's CSV reader takes.
+# Spark 4 also names utf-16(be/le) and utf-32, but its line reader splits on
+# the 0x0A byte, which cuts those mid-character (a utf-16 file read rows
+# ending in U+FFFD): they, like every other Python codec, decode in the
+# whole-file pass of _lines_skipping.
+_SPARK_CHARSETS = {
+    "ascii": "us-ascii",
+    "iso8859-1": "iso-8859-1",
+    "utf-8": "utf-8",
+}
+
+
+def _spark_charset(encoding: str) -> str | None:
+    """Spark's name for ``encoding``, or None when only Python can decode
+    it; an unknown codec name raises ``ValueError`` (a pre_check problem)."""
+    try:
+        name = codecs.lookup(encoding).name
+    except LookupError:
+        raise ValueError(f"unknown encoding {encoding!r}") from None
+    return _SPARK_CHARSETS.get(name)
+
+
 def _raw_csv(
     spark: SparkSession,
     path: str,
@@ -253,24 +275,24 @@ def _raw_csv(
                 f"compression={compression!r} but files lack {ext!r} (Spark "
                 f"decodes by extension): {bad[:3]}"
             )
-    if skip_lines or compression == "zip" or compression in _SNAPPY_CODECS:
+    charset = _spark_charset(encoding)
+    if (
+        skip_lines or compression == "zip" or compression in _SNAPPY_CODECS
+        or charset is None
+    ):
         # per-file skip: a header line (if any) is consumed per file here —
         # the RDD union of many files could not otherwise distinguish each
         # file's own header — so the csv parse itself runs headerless and
         # columns are positional (_c0.. — exactly how index-typed entries
-        # address them anyway)
+        # address them anyway). The lines arrive decoded.
         eff_skip = skip_lines + (1 if header else 0)
         lines = _lines_skipping(spark, path, eff_skip, compression, encoding)
         reader = spark.read.option("header", False)
         header = False
     else:
         lines = None
-        reader = spark.read.option("header", header)
-    reader = (
-        reader.option("sep", sep)
-        .option("encoding", encoding)
-        .option("mode", "PERMISSIVE")
-    )
+        reader = spark.read.option("header", header).option("encoding", charset)
+    reader = reader.option("sep", sep).option("mode", "PERMISSIVE")
     if null_format is not None:
         reader = reader.option("nullValue", null_format)
     if n_cols is not None and not header:
@@ -335,9 +357,12 @@ def read_typed_csv(
     decoded per object by sources/snappy_codec.py; lzo variants are REJECTED
     explicitly (no codec in this environment) rather than silently ignored.
 
-    ``skip_lines``/``header`` with a non-UTF-8 ``encoding`` read each file
-    whole in one task (see ``_lines_skipping``): correct decoding, but a
-    large file is not split across its blocks."""
+    ``encoding`` takes any Python codec name. ``skip_lines``/``header``
+    with a non-UTF-8 ``encoding``, and any encoding other than UTF-8,
+    ISO-8859-1 (latin-1) or ASCII, read each file whole in one task (see
+    ``_lines_skipping``): correct decoding, but a large file is not split
+    across its blocks, and a header is consumed per file, so columns are
+    positional (``_c0``..)."""
     flagged = read_typed_csv_flagged(
         spark, path, entries, header=header, sep=sep, encoding=encoding,
         null_format=null_format, skip_lines=skip_lines, compression=compression,
