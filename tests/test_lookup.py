@@ -182,18 +182,20 @@ def test_manifest_entries_carry_key_stats(spark, tmp_path):
     stats), and they are exact per-bucket bounds."""
     import os
 
+    from tg_data_connector_spark.lake.table import _footer_stats
+
     t = _make(spark, str(tmp_path / "t"), n=300, n_buckets=8)
     snap = t.snapshot()
     assert snap.files
     for f in snap.files:
         assert "kmin" in f and "kmax" in f, f
-        rows, kmin, kmax = __import__(
-            "tg_data_connector_spark.lake.table", fromlist=["_footer_info"]
-        )._footer_info((os.path.join(t.root, f["path"]), "doc_id"))
+        rows, stats = _footer_stats(
+            (os.path.join(t.root, f["path"]), ("doc_id",))
+        )
         assert rows == f["rows"]
         # observe-path stats are per-bucket; one file per bucket here, so
         # they must equal the footer's exact per-file bounds
-        assert (kmin, kmax) == (f["kmin"], f["kmax"])
+        assert stats["doc_id"] == [f["kmin"], f["kmax"]]
 
 
 def test_lookup_skips_files_outside_key_range(spark, tmp_path):

@@ -287,7 +287,7 @@ def test_snappy_raw_decode_reference_vectors():
     # 1-byte-offset copy: literal "abcd" then copy(offset=4, len=4)
     stream = bytes([8]) + bytes([3 << 2]) + b"abcd" + bytes([(0 << 2) | 1, 4])
     assert snappy_decompress(stream) == b"abcdabcd"
-    # literal-only round trip incl. the extended-length forms
+    # round trip through the encoder, incl. runs it emits as copies
     for payload in (b"", b"x", b"hello world", b"z" * 100, b"q" * 70000):
         assert snappy_decompress(snappy_compress(payload)) == payload
 
@@ -299,12 +299,40 @@ def test_snappy_raw_decode_rejects_corruption():
         snappy_compress, snappy_decompress,
     )
 
-    with pytest.raises(ValueError, match="offset"):
+    with pytest.raises(ValueError, match="corrupt"):
         snappy_decompress(bytes([4, (0 << 2) | 1, 9, 0]))  # copy before start
     good = bytearray(snappy_compress(b"hello"))
     good[0] = 99  # wrong preamble length
-    with pytest.raises(ValueError, match="preamble|decoded"):
+    with pytest.raises(ValueError, match="corrupt"):
         snappy_decompress(bytes(good))
+    # forged preamble: 6 bytes claiming 4 GiB, rejected before allocating
+    with pytest.raises(ValueError, match="corrupt"):
+        snappy_decompress(b"\x80\x80\x80\x80\x10\x00")
+
+
+def test_snappy_preamble_bound_admits_densest_block():
+    """The preamble bound (22x the block) sits just above snappy's densest
+    valid expansion: 1 MB of zeros (21.3x) round-trips, and the same block
+    with a preamble one byte past the bound is rejected."""
+    import pytest
+
+    from tg_data_connector_spark.sources.snappy_codec import (
+        _MAX_EXPANSION, snappy_compress, snappy_decompress,
+    )
+
+    zeros = bytes(1 << 20)
+    block = snappy_compress(zeros)
+    assert len(zeros) > 21 * len(block)
+    assert snappy_decompress(block) == zeros
+    forged = _MAX_EXPANSION * len(block) + 1
+    head = bytearray()
+    while forged >= 0x80:
+        head.append((forged & 0x7F) | 0x80)
+        forged >>= 7
+    head.append(forged)
+    assert len(head) == 3  # same varint width as the real 2**20 preamble
+    with pytest.raises(ValueError, match="preamble says"):
+        snappy_decompress(bytes(head) + block[3:])
 
 
 def test_framing_snappy_roundtrip_and_crc():
@@ -417,6 +445,49 @@ def test_latin1_whole_file_paths_honour_encoding(spark, tmp_path):
         got = sorted((r["id"], r["v"]) for r in clean.collect())
         assert got == [(i, f"café{i}") for i in range(n)], name
         assert dirty.count() == 0
+
+
+def test_lone_cr_ends_a_line_on_every_path(spark, tmp_path):
+    """\\n, \\r and \\r\\n all end a line (Hadoop's LineReader rule) on
+    every per-file skip path: the same bytes read the same rows from one
+    plain file (textFile), from more than _MAX_UNION_FILES files, from a
+    zip member, from hadoop-snappy and with a latin-1 encoding (whole-file
+    pass). A lone CR must not fold the next row into a value."""
+    import zipfile
+
+    from tg_data_connector_spark.sources.files import _MAX_UNION_FILES
+    from tg_data_connector_spark.sources.snappy_codec import (
+        hadoop_snappy_compress,
+    )
+
+    data = b"hdr\n1,a\r2,b\r\n3,c\n"
+    entries = [ColumnEntry(type="long", index=0, name="id"),
+               ColumnEntry(type="string", index=1, name="v")]
+    cases = {
+        "plain": (1, None, "utf-8", data),
+        "many": (_MAX_UNION_FILES + 1, None, "utf-8", data),
+        "zip": (1, "zip", "utf-8", None),
+        "snappy": (1, "hadoop-snappy", "utf-8",
+                   hadoop_snappy_compress(data, block=8)),
+        "latin1": (1, None, "latin-1", data),
+    }
+    for name, (n, compression, enc, body) in cases.items():
+        d = tmp_path / name
+        d.mkdir()
+        for i in range(n):
+            p = d / f"p{i:03d}.csv"
+            if body is None:
+                with zipfile.ZipFile(p, "w") as zf:
+                    zf.writestr("part.csv", data)
+            else:
+                p.write_bytes(body)
+        clean, dirty = read_typed_csv(
+            spark, str(d), entries, skip_lines=1, encoding=enc,
+            compression=compression,
+        )
+        got = sorted((r["id"], r["v"]) for r in clean.collect())
+        assert got == sorted([(1, "a"), (2, "b"), (3, "c")] * n), name
+        assert dirty.count() == 0, name
 
 
 def test_python_codec_names_read_without_skip(spark, tmp_path):

@@ -203,3 +203,60 @@ def test_cluster_by_unknown_column_rejected(spark, table):
 
     with pytest.raises(ValueError):
         compact(table, cluster_by=["nope"])
+
+
+def test_clustered_compaction_reads_footers_in_one_job(spark, tmp_path):
+    """A clustered compaction writes several files per bucket, so the
+    entries' rows and key bounds come from their parquet footers, and so do
+    the stats_cols ranges: all of it rides ONE footer job, and every entry
+    equals a direct pyarrow read of its file's footer statistics."""
+    import os
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from tg_data_connector_spark.lake.maintain import compact
+
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, key="doc_id", n_buckets=2,
+        sort_on_write=True, stats_cols=["n_tok", "source"],
+        cluster_cols=["n_tok"],
+    )
+    t.append(_interleaved(spark, 2000), lsn_col=F.lit(1))
+    sc = spark.sparkContext
+    group = "clustered-compact-footers"
+    sc.setJobGroup(group, "clustered compaction")
+    try:
+        compact(t, files_per_bucket=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    # the footer read is the one Python collect() the write launches from
+    # lake/table.py (the stage is named after its call site)
+    footer_jobs = [
+        j
+        for j in tracker.getJobIdsForGroup(group)
+        if any(
+            tracker.getStageInfo(s).name.startswith("collect at ")
+            and "lake/table.py:" in tracker.getStageInfo(s).name
+            for s in tracker.getJobInfo(j).stageIds
+        )
+    ]
+    assert len(footer_jobs) == 1
+
+    files = t.snapshot().files
+    assert max(Counter(f["bucket"] for f in files).values()) > 1
+    for f in files:
+        md = pq.ParquetFile(os.path.join(t.root, f["path"])).metadata
+        assert f["rows"] == md.num_rows
+        bounds = {}
+        for i in range(md.num_columns):
+            col = md.row_group(0).column(i).path_in_schema
+            stats = [
+                md.row_group(g).column(i).statistics
+                for g in range(md.num_row_groups)
+            ]
+            bounds[col] = [min(s.min for s in stats), max(s.max for s in stats)]
+        assert [f["kmin"], f["kmax"]] == bounds["doc_id"], f
+        assert f["cstats"] == {c: bounds[c] for c in ("n_tok", "source")}, f

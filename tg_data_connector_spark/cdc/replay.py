@@ -301,12 +301,6 @@ class ReplayEngine:
         hwm = F.element_at(m, F.col("part"))
         return changelog.where(hwm.isNull() | (F.col("offset") > hwm))
 
-    def _offset_bounds(self, changelog: DataFrame) -> tuple[int, int]:
-        row = changelog.agg(
-            F.min("offset").alias("lo"), F.max("offset").alias("hi")
-        ).collect()[0]
-        return (row["lo"], row["hi"]) if row["lo"] is not None else (0, -1)
-
     # ---------- batch stats ----------
     def _stats_aggs(self) -> list:
         """Per-part stats aggregates: high-watermark, event count, the set

@@ -229,7 +229,9 @@ def q_csv_snappy_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     switch supports (``UnstructuredStorageReaderUtil.java:117-213``): one
     framing-snappy object (with a junk line to skip, exercising the
     whole-file decode path) and one hadoop-snappy object (multi-block),
-    decoded by sources/snappy_codec.py, unioned."""
+    unioned. sources/snappy_codec.py parses the containers and pyarrow's
+    bundled snappy encodes and decodes the raw blocks, so the staged
+    objects carry real back-references, not only literals."""
     import os
 
     from .sources.files import ColumnEntry, read_typed_csv

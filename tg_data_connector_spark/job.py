@@ -234,15 +234,7 @@ def _read_flagged(spark: SparkSession, cfg: dict) -> DataFrame:
         # lake -> file/export syncs in job.json). Supports branch checkout
         # and time travel; projection/predicate push into the parquet scan
         # exactly as for the parquet reader.
-        from .lake.fs import uri_scheme
-
-        root = cfg["path"]
-        fs = None
-        if uri_scheme(root) is not None:
-            from .lake.fs import HadoopTableFS
-
-            fs = HadoopTableFS(spark, root)
-        table = LakeTable(spark, root, fs=fs)
+        table = _open_lake(spark, cfg["path"])
         if cfg.get("branch"):
             table = table.checkout(cfg["branch"])
         snap = None

@@ -94,53 +94,19 @@ def read_parquet_files(
                 spark.conf.set(_LISTING_THRESHOLD_CONF, prior)
 
 
-def _footer_info(arg: tuple[str, str]) -> tuple[int, object, object]:
-    """Executor-side parquet footer read: row count plus the key column's
-    min/max folded across row groups (None/None when any row group lacks
-    written statistics — pruning then conservatively keeps the file)."""
-    import pyarrow.parquet as pq
-
-    path, key = arg
-    md = pq.ParquetFile(path).metadata
-    rows = int(md.num_rows)
-    kmin = kmax = None
-    idx = None
-    if key and md.num_row_groups:
-        rg0 = md.row_group(0)
-        for i in range(rg0.num_columns):
-            if rg0.column(i).path_in_schema == key:
-                idx = i
-                break
-    if idx is not None:
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                kmin = kmax = None
-                break
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                try:
-                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                except UnicodeDecodeError:
-                    kmin = kmax = None
-                    break
-            kmin = mn if kmin is None or mn < kmin else kmin
-            kmax = mx if kmax is None or mx > kmax else kmax
-    return rows, kmin, kmax
-
-
-def _footer_col_stats(arg: tuple[str, tuple]) -> dict:
-    """Executor-side parquet footer read: {col: [min, max]} folded across row
-    groups for each requested column. A column missing from the file, lacking
-    statistics in ANY row group, or of a non-JSON-stable type (anything but
-    str/int/float) is omitted — pruning then conservatively keeps the file."""
+def _footer_stats(arg: tuple[str, tuple]) -> tuple[int, dict]:
+    """Executor-side parquet footer read: the row count plus {col: [min,
+    max]} folded across row groups for each requested column. A column
+    missing from the file, lacking statistics in ANY row group, or of a
+    non-JSON-stable type (anything but str/int/float) is omitted — pruning
+    then conservatively keeps the file."""
     import pyarrow.parquet as pq
 
     path, cols = arg
     md = pq.ParquetFile(path).metadata
     out: dict = {}
     if not md.num_row_groups:
-        return out
+        return int(md.num_rows), out
     rg0 = md.row_group(0)
     idx = {}
     for i in range(rg0.num_columns):
@@ -168,7 +134,7 @@ def _footer_col_stats(arg: tuple[str, tuple]) -> dict:
             mx = hi if mx is None or hi > mx else mx
         if mn is not None and mx is not None:
             out[name] = [mn, mx]
-    return out
+    return int(md.num_rows), out
 
 
 _PRUNE_OPS = ("=", "!=", "<", "<=", ">", ">=", "in")
@@ -1425,43 +1391,39 @@ class LakeTable:
                 else:
                     footer_fallback.append(e)  # rare: multi-file bucket / big nb
                 entries.append(e)
-        if footer_fallback:
-            # distributed footer read: executors open the footers in parallel —
-            # never an O(files) loop on the driver. Footers also yield the
-            # key min/max (parquet row-group statistics), so these entries
-            # get PER-FILE stats — tighter than the observe path's per-bucket
-            # bounds when a bucket spans several files.
-            stats_key = key if stats_ok else ""
+        stats_cols = tuple(
+            c for c in self.meta().get("stats_cols", ()) if c in df.columns
+        )
+        # ONE distributed footer job per commit (executors open the footers
+        # in parallel — never an O(files) loop on the driver). It reads the
+        # row count and key min/max of the fallback entries — per-file
+        # bounds, tighter than the observe path's per-bucket ones when a
+        # bucket spans several files — and, for every entry, the declared
+        # stats_cols ranges (read(filters=...) pruning).
+        footer_entries = entries if stats_cols else footer_fallback
+        if footer_entries:
+            fallback = {id(e) for e in footer_fallback}
+            key_cols = (key,) if stats_ok else ()
             args = [
-                (os.path.join(self.root, e["path"]), stats_key)
-                for e in footer_fallback
+                (
+                    os.path.join(self.root, e["path"]),
+                    (key_cols if id(e) in fallback else ()) + stats_cols,
+                )
+                for e in footer_entries
             ]
             infos = (
                 self.spark.sparkContext.parallelize(args, max(1, len(args) // 64))
-                .map(_footer_info)
+                .map(_footer_stats)
                 .collect()
             )
-            for e, (n, kmin, kmax) in zip(footer_fallback, infos):
-                e["rows"] = n
-                if kmin is not None and kmax is not None:
-                    e["kmin"], e["kmax"] = kmin, kmax
-        stats_cols = [
-            c for c in self.meta().get("stats_cols", ()) if c in df.columns
-        ]
-        if stats_cols and entries:
-            # generalized column stats (read(filters=...) pruning): one
-            # distributed footer job per commit — executors fold row-group
-            # min/max per declared column; never an O(files) driver loop
-            cols = tuple(stats_cols)
-            args = [(os.path.join(self.root, e["path"]), cols) for e in entries]
-            stats = (
-                self.spark.sparkContext.parallelize(args, max(1, len(args) // 64))
-                .map(_footer_col_stats)
-                .collect()
-            )
-            for e, cs in zip(entries, stats):
-                if cs:
-                    e["cstats"] = cs
+            for e, (n, stats) in zip(footer_entries, infos):
+                if id(e) in fallback:
+                    e["rows"] = n
+                    if stats_ok and key in stats:
+                        e["kmin"], e["kmax"] = stats[key]
+                cstats = {c: stats[c] for c in stats_cols if c in stats}
+                if cstats:
+                    e["cstats"] = cstats
         if crash_after_stage:  # test hook: simulate dying between the two phases
             raise RuntimeError("simulated crash after stage, before publish")
         return entries

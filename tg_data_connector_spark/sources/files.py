@@ -70,8 +70,8 @@ def _cast(col, entry: ColumnEntry):
 # (reference codec switch: ``UnstructuredStorageReaderUtil.java:117-213``).
 _EXTENSION_CODECS = {"gzip": ".gz", "bzip2": ".bz2", "deflate": ".deflate"}
 _UNSUPPORTED_CODECS = {"lzo", "lzo_deflate"}
-# snappy containers decode in the whole-file pass via the pure-Python
-# decoders in sources/snappy_codec.py (no Spark/Hadoop codec available here)
+# snappy containers decode in the whole-file pass: sources/snappy_codec.py
+# parses the container, pyarrow's bundled codec decodes the raw blocks
 _SNAPPY_CODECS = {"hadoop-snappy", "framing-snappy"}
 
 
@@ -103,40 +103,57 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
 _MAX_UNION_FILES = 32
 
 
-def _whole_file_lines(sc, files: list[str], skip: int, encoding: str):
-    """ONE binaryFiles RDD over all objects; per-file decompress (gzip/bzip2/
-    deflate by extension) + decode (``encoding``) + drop the first `skip`
-    lines, executor-side."""
+def _whole_file_lines(
+    sc, files: list[str], skip: int, encoding: str, compression: str | None
+):
+    """ONE binaryFiles RDD over all objects. Per object, executor-side: its
+    byte buffers (the zip members, one snappy container, one gzip/bzip2/
+    deflate file picked by extension, or the raw bytes), each decoded with
+    ``encoding``, split into lines and stripped of its first `skip` lines.
 
-    def decode(pair):
+    Lines end at LF, CR or CRLF — Hadoop's LineReader rule, which the
+    textFile path and Spark's CSV reader follow — NOT str.splitlines(),
+    which also breaks on VT, FF, NEL, U+2028 etc. and would parse the same
+    bytes into a DIFFERENT row set than the textFile path."""
+
+    def buffers(path, data):
+        if compression == "zip":
+            import io
+            import zipfile
+
+            with zipfile.ZipFile(io.BytesIO(data)) as zf:
+                return [zf.read(member) for member in zf.namelist()]
+        if compression in _SNAPPY_CODECS:
+            from . import snappy_codec
+
+            if compression == "framing-snappy":
+                return [snappy_codec.framing_snappy_decompress(data)]
+            return [snappy_codec.hadoop_snappy_decompress(data)]
+        import bz2
+        import gzip
+        import zlib
+
+        for ext, decompress in (
+            (".gz", gzip.decompress),
+            (".bz2", bz2.decompress),
+            (".deflate", zlib.decompress),
+        ):
+            if path.endswith(ext):
+                return [decompress(data)]
+        return [data]
+
+    def lines(pair):
         path, content = pair
-        data = bytes(content)
-        if path.endswith(".gz"):
-            import gzip
-
-            data = gzip.decompress(data)
-        elif path.endswith(".bz2"):
-            import bz2
-
-            data = bz2.decompress(data)
-        elif path.endswith(".deflate"):
-            import zlib
-
-            data = zlib.decompress(data)
-        # split on \n with per-line \r strip (Hadoop LineRecordReader
-        # semantics) — NOT str.splitlines(), which also breaks on \x0b/\x0c/
-        # \x85/U+2028 etc. and would parse the same bytes into a DIFFERENT
-        # row set than the <=_MAX_UNION_FILES textFile path
-        lines = data.decode(encoding).split("\n")
-        if lines and lines[-1] == "":
-            lines.pop()  # trailing newline is a terminator, not an empty row
-        for i, line in enumerate(lines):
-            if i >= skip:
-                yield line[:-1] if line.endswith("\r") else line
+        for data in buffers(path, bytes(content)):
+            text = data.decode(encoding)
+            rows = text.replace("\r\n", "\n").replace("\r", "\n").split("\n")
+            if rows[-1] == "":
+                rows.pop()  # trailing newline is a terminator, not an empty row
+            yield from rows[skip:]
 
     return sc.binaryFiles(
         ",".join(files), minPartitions=min(len(files), sc.defaultParallelism)
-    ).flatMap(decode)
+    ).flatMap(lines)
 
 
 def _lines_skipping(
@@ -150,71 +167,25 @@ def _lines_skipping(
     the reference's skipHeader/line-skip (``UnstructuredStorageReaderUtil.java:
     239-313``) which Spark's CSV reader cannot express (its `skipRows` option
     is a silent no-op on 4.1, verified empirically). This is the one genuinely
-    per-partition-imperative corner of the reader, hence the RDD. ZIP archives
-    (reference supports them; no Spark codec exists) decompress member-by-member
-    inside the same pass.
+    per-partition-imperative corner of the reader, hence the RDD.
 
-    DAG shape: few files -> one splittable textFile+zipWithIndex per file
-    (large files parallelize across their blocks); many files (or zip) -> ONE
-    whole-file RDD over every object, so the driver plan stays O(1) RDDs at
-    10^5 objects instead of O(files) union nodes.
-
-    Every whole-file pass decodes with ``encoding`` (the reference's reader
-    charset, ``UnstructuredStorageReaderUtil.java:144-155``). ``textFile``
-    always decodes UTF-8, so other encodings take the whole-file pass even
-    for few files. The cost: such a file is read by one task, whole, in one
-    Python worker, so a large non-UTF-8 file no longer splits across its
-    blocks (a multi-GB file needs that much worker memory)."""
+    DAG shape: few plain UTF-8 files -> one splittable textFile+zipWithIndex
+    per file (large files parallelize across their blocks); everything else
+    -> ONE whole-file RDD over every object (``_whole_file_lines``), so the
+    driver plan stays O(1) RDDs at 10^5 objects instead of O(files) union
+    nodes. ZIP archives and snappy containers (no Spark codec reads them
+    here) and non-UTF-8 files (``textFile`` always decodes UTF-8) take the
+    whole-file pass even for few files. The cost: such a file is read by one
+    task, whole, in one Python worker, so a large file no longer splits
+    across its blocks (a multi-GB file needs that much worker memory)."""
     sc = spark.sparkContext
     files = _list_files(spark, path)
-    if compression == "zip":
-        import io
-        import zipfile
-
-        def unzip(pair):
-            _, content = pair
-            with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
-                for member in zf.namelist():
-                    with zf.open(member) as fh:
-                        for i, line in enumerate(
-                            io.TextIOWrapper(fh, encoding=encoding)
-                        ):
-                            if i >= skip:
-                                yield line.rstrip("\r\n")
-
-        return sc.binaryFiles(
-            ",".join(files), minPartitions=min(len(files), sc.defaultParallelism)
-        ).flatMap(unzip)
-    if compression in _SNAPPY_CODECS:
-        # same whole-file shape as zip: Spark has no codec for these
-        # containers here, so each object decodes in one executor-side pass
-        decomp_name = compression
-
-        def unsnap(pair):
-            from .snappy_codec import (
-                framing_snappy_decompress, hadoop_snappy_decompress,
-            )
-
-            _, content = pair
-            fn = (
-                framing_snappy_decompress
-                if decomp_name == "framing-snappy"
-                else hadoop_snappy_decompress
-            )
-            data = fn(bytes(content))
-            lines = data.decode(encoding).split("\n")
-            if lines and lines[-1] == "":
-                lines.pop()
-            for i, line in enumerate(lines):
-                if i >= skip:
-                    yield line[:-1] if line.endswith("\r") else line
-
-        return sc.binaryFiles(
-            ",".join(files), minPartitions=min(len(files), sc.defaultParallelism)
-        ).flatMap(unsnap)
     utf8 = codecs.lookup(encoding).name == "utf-8"
-    if len(files) > _MAX_UNION_FILES or not utf8:
-        return _whole_file_lines(sc, files, skip, encoding)
+    if (
+        len(files) > _MAX_UNION_FILES or not utf8
+        or compression == "zip" or compression in _SNAPPY_CODECS
+    ):
+        return _whole_file_lines(sc, files, skip, encoding, compression)
     rdds = []
     for f in files:
         rdds.append(
@@ -354,7 +325,8 @@ def read_typed_csv(
     ``compression``: None/"auto" = extension-based auto-detect (gzip/bzip2/
     deflate decode transparently); "zip" = archive members decompressed in a
     per-file pass; "hadoop-snappy"/"framing-snappy" = container formats
-    decoded per object by sources/snappy_codec.py; lzo variants are REJECTED
+    parsed per object by sources/snappy_codec.py, raw blocks decoded by
+    pyarrow's bundled snappy; lzo variants are REJECTED
     explicitly (no codec in this environment) rather than silently ignored.
 
     ``encoding`` takes any Python codec name. ``skip_lines``/``header``

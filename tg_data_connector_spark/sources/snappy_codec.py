@@ -1,15 +1,16 @@
-"""Pure-Python snappy decoders for the file reader's codec switch.
+"""Snappy containers for the file reader's codec switch.
 
 The reference's unstructured-storage reader decodes a codec family keyed by
 a config string (``UnstructuredStorageReaderUtil.java:117-213``), including
 ``hadoop-snappy`` (Hadoop's BlockCompressorStream container) and
-``framing-snappy`` (the snappy framing format). No Spark/Hadoop codec for
-either ships in this environment and the python-snappy wheel is not
-installed, so this module implements the two container formats AND the raw
-snappy block format from the public format descriptions:
+``framing-snappy`` (the snappy framing format). No Spark/Hadoop codec reads
+framing-snappy, and Hadoop's ``SnappyCodec`` only reads ``.snappy``-named
+files as UTF-8 text, so this module parses both containers itself:
 
-  * raw snappy:      google/snappy format_description.txt (varint preamble,
-                     literal/copy tagged elements, overlapping copies);
+  * raw snappy:      google/snappy format_description.txt, decoded and
+                     encoded by pyarrow's bundled C++ snappy (pyarrow is on
+                     every executor for the Arrow UDFs); only the varint
+                     preamble is read here, to size and bound the output;
   * framing-snappy:  google/snappy framing_format.txt (stream identifier,
                      per-chunk masked CRC32C, compressed/uncompressed/
                      padding/skippable chunk types);
@@ -17,21 +18,20 @@ snappy block format from the public format descriptions:
                      uncompressed-block length, then one or more big-endian
                      length-prefixed raw-snappy chunks per block).
 
-Decode runs executor-side inside the whole-file reader pass (the same place
-gzip/bzip2/deflate decode for >_MAX_UNION_FILES inputs), so throughput is
-bounded by the Python byte loop — fine for the many-small-objects shape
-these containers are used for; a cluster with the native codec on the
-classpath would read the same files through Spark's own codec instead.
+Decode runs executor-side inside the whole-file reader pass
+(``files._whole_file_lines``). Raw blocks decode at native speed; the
+framing format's CRC32C check is pure Python (no native crc32c is
+installed) and bounds framing-snappy throughput (BENCH.md, snappy table).
 
 The writer half (`framing_snappy_compress` / `hadoop_snappy_compress`)
-emits literal-only snappy — a fully compliant encoding every decoder must
-accept (compression is optional in the format, correctness is not) — and
 exists for fixtures and round-trip tests, not as a production compressor.
 """
 
 from __future__ import annotations
 
 import struct
+
+import pyarrow as pa
 
 _MASK_DELTA = 0xA282EAD8
 _CRC32C_POLY = 0x82F63B78
@@ -60,6 +60,13 @@ def _masked_crc(data: bytes) -> int:
     return (((crc >> 15) | (crc << 17)) + _MASK_DELTA) & 0xFFFFFFFF
 
 
+# The densest snappy element is a 3-byte copy of 64 bytes (a 2-byte copy
+# emits at most 11, a literal one byte per input byte), so a valid block
+# expands at most 64/3 = 21.33x (1 MB of zeros: 21.32x). The preamble is
+# untrusted and pyarrow allocates it up front: anything larger is corrupt.
+_MAX_EXPANSION = 22
+
+
 def snappy_decompress(data: bytes) -> bytes:
     """Raw snappy block decode (format_description.txt)."""
     # varint-encoded uncompressed length
@@ -75,72 +82,22 @@ def snappy_decompress(data: bytes) -> bytes:
         shift += 7
         if shift > 31:
             raise ValueError("snappy: preamble varint too long")
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:  # 60..63: length-1 in the next 1..4 LE bytes
-                extra = length - 59
-                length = int.from_bytes(data[pos:pos + extra], "little")
-                pos += extra
-            length += 1
-            if pos + length > n:
-                raise ValueError("snappy: literal overruns input")
-            out += data[pos:pos + length]
-            pos += length
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            offset = int.from_bytes(data[pos:pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy: copy offset out of range")
-        start = len(out) - offset
-        for i in range(length):  # copies may overlap: byte-at-a-time
-            out.append(out[start + i])
-    if len(out) != expect:
+    if expect > _MAX_EXPANSION * len(data):
         raise ValueError(
-            f"snappy: decoded {len(out)} bytes, preamble said {expect}"
+            f"snappy: corrupt block (preamble says {expect} bytes from "
+            f"{len(data)})"
         )
-    return bytes(out)
+    try:
+        return pa.decompress(
+            data, decompressed_size=expect, codec="snappy", asbytes=True
+        )
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"snappy: corrupt block ({e})") from None
 
 
 def snappy_compress(data: bytes) -> bytes:
-    """Literal-only raw snappy (compliant; no back-references emitted)."""
-    out = bytearray()
-    # varint length
-    v = len(data)
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-    pos = 0
-    while pos < len(data):
-        chunk = data[pos:pos + 65536]
-        length = len(chunk) - 1
-        if length < 60:
-            out.append(length << 2)
-        elif length < 256:
-            out.append(60 << 2)
-            out.append(length)
-        else:
-            out.append(61 << 2)
-            out += length.to_bytes(2, "little")
-        out += chunk
-        pos += len(chunk)
-    return bytes(out)
+    """Raw snappy block encode (pyarrow's bundled codec)."""
+    return pa.compress(data, codec="snappy", asbytes=True)
 
 
 _STREAM_ID = b"\xff\x06\x00\x00sNaPpY"
