@@ -166,10 +166,9 @@ def test_version_pack_fast_path_matches_decimal(spark):
 
 
 def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
-    """Full replay equivalence for the engine's non-default dedup paths: the
-    all-shuffle winner join (threshold 0, the scaling shape) and the salted
-    two-phase dedup (dedup_strategy="salted"). Any other strategy is
-    rejected up front."""
+    """Full replay equivalence for the all-shuffle winner join (threshold 0,
+    the scaling shape): every batch takes the shuffle and the final table
+    matches the oracle."""
     from tg_data_connector_spark.cdc import ReplayConfig, ReplayEngine
     from tg_data_connector_spark.cdc.genlog import (
         gen_changelog,
@@ -185,24 +184,17 @@ def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
     exp = oracle_final_state(seed, log_t).select(
         "doc_id", "tokens", "n_tok", "source"
     )
-    for tag, cfg in (
-        ("shuffle", ReplayConfig(events_per_batch=3_000, parse_payload=True,
-                                 broadcast_winners_max_keys=0)),
-        ("salted", ReplayConfig(events_per_batch=3_000, parse_payload=True,
-                                dedup_strategy="salted", salt_buckets=4)),
-    ):
-        table = LakeTable.create(
-            spark, str(tmp_path / tag), SCHEMA, key="doc_id", n_buckets=8
-        )
-        table.append(seed)
-        reports = ReplayEngine(spark, table, cfg).replay(log, run_id=tag)
-        joins = {r.winner_join.get("join") for r in reports}
-        assert joins == ({"shuffle"} if tag == "shuffle" else {None}), tag
-        final = table.read().select("doc_id", "tokens", "n_tok", "source")
-        assert final.exceptAll(exp).count() == 0, tag
-        assert exp.exceptAll(final).count() == 0, tag
-    with pytest.raises(ValueError, match="dedup_strategy"):
-        ReplayEngine(spark, table, ReplayConfig(dedup_strategy="arrow"))
+    cfg = ReplayConfig(events_per_batch=3_000, parse_payload=True,
+                       broadcast_winners_max_keys=0)
+    table = LakeTable.create(
+        spark, str(tmp_path / "shuffle"), SCHEMA, key="doc_id", n_buckets=8
+    )
+    table.append(seed)
+    reports = ReplayEngine(spark, table, cfg).replay(log, run_id="shuffle")
+    assert {r.winner_join.get("join") for r in reports} == {"shuffle"}
+    final = table.read().select("doc_id", "tokens", "n_tok", "source")
+    assert final.exceptAll(exp).count() == 0
+    assert exp.exceptAll(final).count() == 0
 
 
 def test_winner_join_auto_switch_by_batch_shape(spark, tmp_path):

@@ -185,6 +185,27 @@ def test_lineage_rows_written(spark, tmp_table_root):
     assert all(int(wm[str(p)]) == per_part[p]["h"] for p in per_part)
 
 
+@pytest.mark.parametrize("n_parts", [64, 65])
+def test_lineage_dirty_per_part_exact_or_null(spark, tmp_path, n_parts):
+    """Per-part dirty counts ride the write job for up to 64 parts: each
+    lineage row then holds its part's exact count. Past 64 parts only the
+    batch total is counted, and every lineage row says NULL (unknown)
+    rather than a false 0."""
+    t, _ = _setup(spark, str(tmp_path / "t"))
+    log = gen_changelog(spark, 3000, N_DOCS, n_parts=n_parts)
+    eng = ReplayEngine(spark, t, ReplayConfig(events_per_batch=10**9))
+    [rep] = eng.replay(log, run_id="r1")
+    _, dirty = split_quarantine(log)
+    assert rep.dirty == dirty.count() > 0
+    lin = {r["part"]: r["dirty"] for r in eng.lineage.read(spark).collect()}
+    assert len(lin) == n_parts
+    if n_parts == 64:
+        by_part = {r["part"]: r["count"] for r in dirty.groupBy("part").count().collect()}
+        assert lin == {p: by_part.get(p, 0) for p in range(n_parts)}
+    else:
+        assert set(lin.values()) == {None}
+
+
 def test_schema_boundary_version_collision_applied_once(spark, tmp_table_root):
     """Adversarial: a data event sharing a schema event's EXACT
     (commit_lsn, seq_no) must be applied exactly once — in the sub-batch

@@ -2,9 +2,12 @@
 across checkpoint wipes (the snapshot batch-id check, not Spark's checkpoint,
 carries exactly-once)."""
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from tg_data_connector_spark.cdc import (
+    ErrorLimit,
     ReplayConfig,
     ReplayEngine,
     gen_changelog,
@@ -78,6 +81,137 @@ def test_stream_tail_mor_matches_oracle(spark, tmp_path):
     got = table.read().select("doc_id", "tokens", "n_tok", "source")
     assert got.exceptAll(expected).count() == 0
     assert expected.exceptAll(got).count() == 0
+
+
+def _stage_parts(log, src_dir, groups):
+    """One parquet file per group of source partitions: with
+    maxFilesPerTrigger=1 every micro-batch is exactly one group."""
+    for parts in groups:
+        log.where(F.col("part").isin(*parts)).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+
+
+def _stream_snapshots(table):
+    """batch_id -> summary metrics of every micro-batch commit."""
+    out = {}
+    for v in table.history():
+        summary = table.snapshot(v).summary
+        if str(summary.get("batch_id", "")).startswith("stream:"):
+            out[summary["batch_id"]] = summary.get("metrics", {})
+    return out
+
+
+def test_stream_micro_batch_accounting_is_exact(spark, tmp_path, monkeypatch):
+    """A micro-batch runs the replay batch's apply path, observe() metrics
+    included: each micro-batch's BatchReport, its snapshot's metrics and its
+    lineage rows carry the exact dirty and winner counts, and the lineage
+    holds one row per (micro-batch, part), written while the stream runs."""
+    from tg_data_connector_spark.cdc.metrics import LineageLog
+    from tg_data_connector_spark.cdc.quality import split_quarantine
+
+    log = gen_changelog(spark, 3000, 400, n_parts=6)
+    src_dir = str(tmp_path / "log")
+    groups = [(0, 1), (2, 3), (4, 5)]
+    _stage_parts(log, src_dir, groups)
+    seed = gen_seed_sequences(spark, 200)
+    table = LakeTable.create(spark, str(tmp_path / "tbl"), SCHEMA, "doc_id", 8)
+    table.append(seed)
+
+    reports = {}
+    apply_batch = ReplayEngine.apply_batch
+
+    def recording(self, *args, **kwargs):
+        rep = apply_batch(self, *args, **kwargs)
+        reports[rep.batch_id] = rep
+        return rep
+
+    monkeypatch.setattr(ReplayEngine, "apply_batch", recording)
+    eng = ReplayEngine(spark, table, ReplayConfig(error_limit=ErrorLimit()))
+    q = stream_replay(
+        spark, eng, src_dir, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+
+    lin = LineageLog(table.root).read(spark).collect()
+    assert len({(r["batch_id"], r["part"]) for r in lin}) == len(lin) == 6
+    assert sum(r["events"] for r in lin) == log.count()
+    parts_of = {}
+    for r in lin:
+        parts_of.setdefault(r["batch_id"], set()).add(r["part"])
+    assert sorted(map(sorted, parts_of.values())) == [list(g) for g in groups]
+
+    snaps = _stream_snapshots(table)
+    assert set(snaps) == set(reports) == set(parts_of)
+    total_dirty = 0
+    for bid, parts in parts_of.items():
+        events = log.where(F.col("part").isin(*parts))
+        clean, dirty = split_quarantine(events)
+        n_dirty = dirty.count()
+        n_winners = clean.select("doc_id").distinct().count()
+        rep = reports[bid]
+        assert (rep.dirty, snaps[bid]["dirty"]) == (n_dirty, n_dirty), bid
+        assert (rep.deduped_keys, snaps[bid]["winners"]) == (
+            n_winners, n_winners
+        ), bid
+        by_part = {r["part"]: r["dirty"] for r in lin if r["batch_id"] == bid}
+        for p in parts:
+            assert by_part[p] == dirty.where(F.col("part") == p).count()
+        total_dirty += n_dirty
+    assert total_dirty > 0  # the log really carries dirty rows
+
+    expected = oracle_final_state(seed, log)
+    got = table.read().select("doc_id", "tokens", "n_tok", "source")
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
+def test_stream_all_dirty_micro_batch_terminates(spark, tmp_path):
+    """A micro-batch with no clean row: adaptive execution plans the kept
+    branch away, the dirty observe() node with it, and the engine counts
+    the dirty rows with one narrow job instead. The stream must finish
+    (Observation.get must not block) and account every row as dirty."""
+    log = (
+        gen_changelog(spark, 400, 100, n_parts=2)
+        .where(F.col("op") != "D")
+        .withColumn("n_tok", F.col("n_tok") + 1)  # every event violates it
+    )
+    src_dir = str(tmp_path / "log")
+    log.coalesce(1).write.parquet(src_dir)
+    n = log.count()
+    table = LakeTable.create(spark, str(tmp_path / "tbl"), SCHEMA, "doc_id", 8)
+    table.append(gen_seed_sequences(spark, 50))
+    state = sorted(table.read().select("doc_id", "tokens").collect())
+    eng = ReplayEngine(spark, table, ReplayConfig(error_limit=ErrorLimit()))
+    q = stream_replay(spark, eng, src_dir, str(tmp_path / "ckpt"))
+    done = q.awaitTermination(180)
+    if not done:
+        q.stop()
+    assert done
+    assert q.exception() is None
+    [metrics] = _stream_snapshots(table).values()
+    assert metrics["dirty"] == n and metrics["winners"] == 0
+    assert sorted(table.read().select("doc_id", "tokens").collect()) == state
+
+
+def test_stream_error_limit_breach_publishes_nothing(spark, tmp_path):
+    """A micro-batch over the error limit fails the query after its write
+    job and before its snapshot publishes: the table version and the
+    watermarks stay where they were."""
+    log = gen_changelog(spark, 2000, 300, n_parts=4)
+    src_dir = str(tmp_path / "log")
+    log.coalesce(1).write.parquet(src_dir)
+    table = LakeTable.create(spark, str(tmp_path / "tbl"), SCHEMA, "doc_id", 8)
+    table.append(gen_seed_sequences(spark, 200))
+    version, wm = table.current_version(), table.snapshot().watermarks()
+    eng = ReplayEngine(spark, table, ReplayConfig(error_limit=ErrorLimit(record=0)))
+    q = stream_replay(spark, eng, src_dir, str(tmp_path / "ckpt"))
+    with pytest.raises(StreamingQueryException, match="ErrorLimitExceeded"):
+        q.awaitTermination(180)
+    assert table.current_version() == version
+    assert table.snapshot().watermarks() == wm
+    assert not _stream_snapshots(table)
 
 
 def test_stateful_sessionize_stream(spark, tmp_path):

@@ -6,7 +6,7 @@ idiomatic Spark DataFrame pipeline:
 
   changelog tail (I/U/D/S events) -> vectorized parse (Arrow pandas_udf)
   -> quarantine split (dirty-record policy, DataX ErrorRecordChecker semantics)
-  -> LWW dedup on (commit_lsn, seq_no) (salted two-phase aggregation)
+  -> LWW dedup on (commit_lsn, seq_no) (winner prune before the shuffle)
   -> MERGE upsert into a snapshot-versioned bucketed lake table
   -> idempotent two-phase commit carrying per-partition high-watermarks.
 

@@ -6,9 +6,9 @@ on the destination DB resolving duplicate keys row-by-row in arrival order
 must be reduced to the single newest event per key *before* the join — Iceberg's
 MERGE has the same one-source-row-per-key cardinality rule.
 
-Three physical strategies, same semantics:
+Three physical kernels, same semantics; the replay engine uses the first:
 
-  * ``winner_filter``   — the replay engine's default: a narrow hash-aggregate
+  * ``winner_filter``   — the replay engine's LWW dedup: a narrow hash-aggregate
     of each key's max packed version joins back to the batch and prunes the
     losers before any payload-wide shuffle (``winner_versions`` builds the
     aggregate; the engine picks the broadcast or shuffled-hash join).
@@ -19,8 +19,8 @@ Three physical strategies, same semantics:
   * ``lww_dedup_salted``— explicit two-phase for pathologically hot keys: first
     ``groupBy(key, salt)`` (salt = hash of the version pair, so a hot key's
     events spread over S reducers), then ``groupBy(key)`` over the S partials.
-    This is the north rule's "explicit salting of hot sources"
-    (``ReplayConfig(dedup_strategy="salted")``).
+    This is the north rule's "explicit salting of hot sources", kept as an
+    operator (gate ``cdc_salted_skew_dedup``), not as an engine option.
 
 Salting vs plain ``max_by`` (measured, see BENCH notes in BASELINE.md):
 ``max_by`` is an algebraic aggregate, so Spark always plans

@@ -7,11 +7,15 @@ applied batch contributes one lineage row PER SOURCE PARTITION:
 
   (run_id, batch_id, part, hwm, events, dirty, snapshot_version, seconds)
 
+``dirty`` is NULL (unknown) for a part whose dirty rows were not counted
+separately: the engine counts per part only up to 64 parts per batch.
+
 Rows buffer in the driver and flush to ``<table_root>/_lineage`` (parquet,
-append) once per replay invocation — observability never adds a per-batch
-Spark job. The snapshot summary independently carries the authoritative
-watermarks; lineage is the audit trail (which batch moved which partition to
-which offset, at what rate).
+append) once per replay invocation and once per streaming micro-batch, as a
+driver-side pyarrow write — observability never adds a per-batch Spark job.
+The snapshot summary independently carries the authoritative watermarks;
+lineage is the audit trail (which batch moved which partition to which
+offset, at what rate).
 """
 
 from __future__ import annotations
@@ -45,7 +49,7 @@ class LineageLog:
                     int(part),
                     int(m.get("hwm", -1)),
                     int(m.get("events", 0)),
-                    int(m.get("dirty", 0)),
+                    None if m.get("dirty") is None else int(m["dirty"]),
                     int(snapshot_version),
                     float(seconds),
                 )

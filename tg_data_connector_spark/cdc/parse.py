@@ -103,8 +103,9 @@ def parse_events(raw: DataFrame, payload_col: str = "payload") -> DataFrame:
 
 @pandas_udf(ArrayType(IntegerType()))
 def decode_tokens(payload: pd.Series) -> pd.Series:
-    """Scalar pandas_udf form of the same decode — kept for column-level use
-    (e.g. decoding inside a wider projection where mapInArrow's whole-batch
-    signature is inconvenient). Vectorized via one Arrow round-trip."""
+    """Scalar pandas_udf form of the same decode: the replay engine's decode
+    of the LWW winners, placed inside the projection so it rides the stage
+    of the winner prune (mapInArrow's whole-batch signature cannot sit in a
+    projection). Vectorized via one Arrow round-trip."""
     arr = pa.Array.from_pandas(payload, type=pa.binary())
     return decode_payload_array(arr).to_pandas()

@@ -38,29 +38,37 @@ from pyspark.sql import functions as F
 from ..lake.evolve import apply_schema_change
 from ..lake.merge import merge_upsert
 from ..lake.table import LakeTable
-from .dedup import lww_dedup_salted, winner_filter, winner_versions
-from .parse import parse_events
+from .dedup import winner_filter, winner_versions
 from .quality import ErrorLimit
 
 CORE_COLS = ["doc_id", "tokens", "n_tok", "source"]
 
 
+def _observed(obs) -> dict:
+    """An Observation's metrics, or {} when its node never ran. Adaptive
+    execution replaces a subtree it has proven empty (the kept branch of an
+    all-dirty batch) and the observe node goes with it; Spark then completes
+    the Observation with a row that fails to convert."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        return dict(obs.get)
+    except Py4JJavaError:
+        return {}
+
+
 @dataclass
 class ReplayConfig:
     events_per_batch: int = 1_000_000
-    # LWW dedup physical strategy:
-    #   "winner" (default) — JVM-side two-phase: a narrow hash-aggregate finds
-    #       each key's max (lsn, seq) version (decimal-packed so it stays in
-    #       codegen'd HashAggregate), broadcast-joins back to prune losers
-    #       BEFORE any shuffle, then one winners-only repartition + in-place
-    #       dropDuplicates. The payload-wide shuffle shrinks ~|events|/|keys|x
-    #       and Python sees ONLY the decode of winners (measured: the old
-    #       full-batch Arrow kernel put 16 Python workers next to 16 JVM lanes
-    #       — 2x host oversubscription that collapsed 16-lane scaling).
-    #   "salted" — two-phase (key, salt) partial then key final; only for
-    #       non-algebraic kernels where map-side partials can't absorb a hot
-    #       key (see dedup.py module docstring)
-    dedup_strategy: str = "winner"
+    # LWW dedup (resolution="lww") has one physical plan, the JVM-side
+    # two-phase winner prune: a narrow hash-aggregate finds each key's max
+    # (lsn, seq) version (decimal-packed so it stays in codegen'd
+    # HashAggregate), joins back to prune losers BEFORE any shuffle, then one
+    # winners-only repartition + in-place dropDuplicates. The payload-wide
+    # shuffle shrinks ~|events|/|keys|x and Python sees ONLY the decode of
+    # winners. The salted two-phase kernel (cdc.dedup.lww_dedup_salted) is
+    # an operator, not an engine option: it measured slower than the winner
+    # prune (BASELINE.md, BENCH.md) — map-side partials absorb hot keys.
     # Row-resolution semantics:
     #   "lww" (default) — whole-row last-writer-wins: the winning event's
     #       image replaces the row (the flagship north-rule contract).
@@ -74,7 +82,7 @@ class ReplayConfig:
     #       partial=True: U may omit the tokens/n_tok pair, only TOGETHER).
     #       Requires merge_mode="cow" (MoR's whole-row delta resolution
     #       cannot express per-column survival) and decoded events
-    #       (parse_payload=False); dedup_strategy is ignored.
+    #       (parse_payload=False); there is no winner prune.
     #   "aggregate" — per-column AGGREGATE combiners (Paimon's aggregation
     #       merge engine): agg_spec maps payload columns to "sum" / "max" /
     #       "min" / "last" (default "last" = partial semantics). DELETE
@@ -95,7 +103,7 @@ class ReplayConfig:
     # bytes_per_batch / mean event payload size (measured on a bounded sample
     # at replay start). events_per_batch then acts as a floor of 1.
     bytes_per_batch: int | None = None
-    # winner strategy: the per-key winner versions join back to the batch
+    # the per-key winner versions join back to the batch
     # either as a BROADCAST (losers pruned map-side before ANY shuffle, at the
     # cost of a driver-side build that is FIXED time regardless of cluster
     # width) or SHUFFLED-HASH (every byte of work parallelizes). The engine
@@ -139,7 +147,6 @@ class ReplayConfig:
     # maintenance). Bounds read amplification at <= mor_compact_after deltas
     # per bucket between maintenance runs.
     mor_compact_after: int | None = None
-    salt_buckets: int = 16  # dedup_strategy="salted": salts per key
     # Write-audit-publish (lake WAP surface): when set, every batch commits
     # STAGED (publish=False) and the hook runs with (table, staged_snapshot)
     # — read it via table.read(snapshot=staged) — returning True to publish
@@ -199,7 +206,7 @@ class BatchReport:
     skipped: bool = False
     schema_changes: int = 0
     phases: dict = field(default_factory=dict)
-    # the winner-join decision (dedup_strategy="winner"): {"join":
+    # the winner-join decision (resolution="lww"): {"join":
     # "broadcast"|"shuffle", "basis": "events"|"winners", "n": the bound it
     # was taken from — the batch's event count or its exact winner count}.
     # A batch split by schema changes reports its last sub-batch.
@@ -215,10 +222,6 @@ class ReplayEngine:
         self.cfg = config
         if config.resolution not in ("lww", "partial", "aggregate"):
             raise ValueError(f"unknown resolution: {config.resolution!r}")
-        if config.dedup_strategy not in ("winner", "salted"):
-            raise ValueError(
-                f"unknown dedup_strategy: {config.dedup_strategy!r}"
-            )
         self._partial = config.resolution in ("partial", "aggregate")
         self._agg_spec = (
             dict(config.agg_spec or {})
@@ -335,8 +338,9 @@ class ReplayEngine:
         crash_after_stage: bool = False,
         run_id: str = "adhoc",
         stats: list | None = None,
-        observe_metrics: bool = True,
     ) -> BatchReport:
+        from .quality import contract_predicate
+
         t0 = time.time()
         snap = self.table.snapshot()
         if batch_id in snap.applied_batches():
@@ -365,17 +369,99 @@ class ReplayEngine:
         )
         self._phase_timings = {"stats": round(time.time() - t_stats, 3)}
 
-        report, dirty_by_part = self._apply_batch_inner(
-            batch, batch_id, t0, events_n, watermarks,
-            affected_buckets, crash_before_publish, crash_after_stage,
-            observe_metrics,
+        pred = contract_predicate(batch, partial=self._partial, pair_check=self._pair_check)
+        exp_counts: dict[str, int] = {}
+        if self.cfg.expectations:
+            # before the dirty-quarantine write: a fail-action abort must not
+            # have appended this batch's dirty rows yet (the retry would
+            # duplicate them in the quarantine dir)
+            batch, exp_counts = self._apply_expectations(batch, pred, batch_id)
+        clean = batch.where(~pred)
+        if self.cfg.quarantine_dir:
+            batch.where(pred).withColumn(
+                "_batch_id", F.lit(batch_id)
+            ).write.mode("append").parquet(self.cfg.quarantine_dir)
+
+        # schema-change events order sub-batches; they are few -> driver-side list
+        schema_events = []
+        if "schema_change" in clean.columns:
+            schema_events = (
+                clean.where(F.col("op") == "S")
+                .select("commit_lsn", "seq_no", "schema_change")
+                .collect()
+            )
+            schema_events.sort(key=lambda r: (r["commit_lsn"], r["seq_no"]))
+            batch = batch.where(F.col("op") != "S")
+
+        # per-part dirty counts ride the write job's observe() node, one
+        # conditional sum per part; past 64 parts only the total does, and
+        # lineage records those parts' dirty as NULL (unknown), not 0
+        track_parts = (
+            sorted(watermarks)
+            if len(watermarks) <= 64 and "part" in batch.columns
+            else []
         )
-        report.phases = dict(self._phase_timings)
+        deduped_total = 0
+        winner_join: dict = {}
+        dirty_n = 0
+        dirty_by_part = dict.fromkeys(track_parts, 0)
+        bounds = [(r["commit_lsn"], r["seq_no"]) for r in schema_events]
+        for k in range(len(bounds) + 1):
+            sub = batch
+            if k > 0:
+                # INCLUSIVE lower / exclusive upper: a data event that shares a
+                # schema event's exact (commit_lsn, seq_no) — contract-unusual
+                # but possible from a coarse-versioned source — falls in the
+                # window AFTER that schema change and is applied exactly once.
+                # (Strict bounds on both sides would silently drop it.)
+                lsn, seq = bounds[k - 1]
+                sub = sub.where(
+                    F.struct(F.col("commit_lsn"), F.col("seq_no"))
+                    >= F.struct(F.lit(lsn).cast("bigint"), F.lit(seq).cast("bigint"))
+                )
+            if k < len(bounds):
+                lsn, seq = bounds[k]
+                sub = sub.where(
+                    F.struct(F.col("commit_lsn"), F.col("seq_no"))
+                    < F.struct(F.lit(lsn).cast("bigint"), F.lit(seq).cast("bigint"))
+                )
+            applied, dirty, join = self._merge_sub_batch(
+                sub,
+                dirty_pred=contract_predicate(sub, partial=self._partial, pair_check=self._pair_check),
+                track_parts=track_parts,
+                events_n=events_n,
+                prior_dirty=dirty_n,
+                batch_id=f"{batch_id}/{k}" if bounds else batch_id,
+                watermarks=watermarks if k == len(bounds) else None,
+                final=(k == len(bounds)),
+                affected_buckets=affected_buckets,
+                crash_before_publish=crash_before_publish,
+                crash_after_stage=crash_after_stage,
+            )
+            deduped_total += applied
+            winner_join = join or winner_join
+            dirty_n += int(dirty.get("nd") or 0)
+            for p in track_parts:
+                dirty_by_part[p] += int(dirty.get(f"nd_{p}") or 0)
+            if k < len(bounds):
+                apply_schema_change(self.table, schema_events[k]["schema_change"])
+
+        report = BatchReport(
+            batch_id,
+            events_n,
+            dirty_n,
+            deduped_total,
+            time.time() - t0,
+            schema_changes=len(bounds),
+            phases=dict(self._phase_timings),
+            winner_join=winner_join,
+            expectations=exp_counts,
+        )
         per_part = {
             int(r["part"]): {
                 "hwm": r["hwm"],
                 "events": r["n"],
-                "dirty": dirty_by_part.get(int(r["part"]), 0),
+                "dirty": dirty_by_part.get(int(r["part"])),
             }
             for r in stats
         }
@@ -435,120 +521,13 @@ class ReplayEngine:
             batch = batch.where(~drop_pred)
         return batch, counts
 
-    def _apply_batch_inner(
-        self,
-        batch: DataFrame,
-        batch_id: str,
-        t0: float,
-        events_n: int,
-        watermarks: dict,
-        affected_buckets: list[int],
-        crash_before_publish: bool,
-        crash_after_stage: bool,
-        observe_metrics: bool = True,
-    ) -> tuple[BatchReport, dict]:
-        from .quality import contract_predicate
-
-        pred = contract_predicate(batch, partial=self._partial, pair_check=self._pair_check)
-        exp_counts: dict[str, int] = {}
-        if self.cfg.expectations:
-            # before the dirty-quarantine write: a fail-action abort must not
-            # have appended this batch's dirty rows yet (the retry would
-            # duplicate them in the quarantine dir)
-            batch, exp_counts = self._apply_expectations(batch, pred, batch_id)
-        clean = batch.where(~pred)
-        if self.cfg.quarantine_dir:
-            batch.where(pred).withColumn(
-                "_batch_id", F.lit(batch_id)
-            ).write.mode("append").parquet(self.cfg.quarantine_dir)
-
-        # schema-change events order sub-batches; they are few -> driver-side list
-        schema_events = []
-        if "schema_change" in clean.columns:
-            schema_events = (
-                clean.where(F.col("op") == "S")
-                .select("commit_lsn", "seq_no", "schema_change")
-                .collect()
-            )
-            schema_events.sort(key=lambda r: (r["commit_lsn"], r["seq_no"]))
-            batch = batch.where(F.col("op") != "S")
-            pred = contract_predicate(batch, partial=self._partial, pair_check=self._pair_check)
-
-        deduped_total = 0
-        winner_join: dict = {}
-        dirty_n = 0
-        dirty_by_part: dict[int, int] = {}
-        parts = sorted(watermarks)
-        bounds = [(r["commit_lsn"], r["seq_no"]) for r in schema_events]
-        for k in range(len(bounds) + 1):
-            sub = batch
-            if k > 0:
-                # INCLUSIVE lower / exclusive upper: a data event that shares a
-                # schema event's exact (commit_lsn, seq_no) — contract-unusual
-                # but possible from a coarse-versioned source — falls in the
-                # window AFTER that schema change and is applied exactly once.
-                # (Strict bounds on both sides would silently drop it.)
-                lsn, seq = bounds[k - 1]
-                sub = sub.where(
-                    F.struct(F.col("commit_lsn"), F.col("seq_no"))
-                    >= F.struct(F.lit(lsn).cast("bigint"), F.lit(seq).cast("bigint"))
-                )
-            if k < len(bounds):
-                lsn, seq = bounds[k]
-                sub = sub.where(
-                    F.struct(F.col("commit_lsn"), F.col("seq_no"))
-                    < F.struct(F.lit(lsn).cast("bigint"), F.lit(seq).cast("bigint"))
-                )
-            applied, dstats, join = self._merge_sub_batch(
-                sub,
-                dirty_pred=contract_predicate(sub, partial=self._partial, pair_check=self._pair_check),
-                parts=parts,
-                events_n=events_n,
-                prior_dirty=dirty_n,
-                observe_metrics=observe_metrics,
-                batch_id=f"{batch_id}/{k}" if bounds else batch_id,
-                watermarks=watermarks if k == len(bounds) else None,
-                final=(k == len(bounds)),
-                affected_buckets=affected_buckets,
-                crash_before_publish=crash_before_publish,
-                crash_after_stage=crash_after_stage,
-            )
-            deduped_total += applied
-            winner_join = join or winner_join
-            dirty_n += dstats.pop("_total", 0)
-            for p, v in dstats.items():
-                dirty_by_part[p] = dirty_by_part.get(p, 0) + v
-            if k < len(bounds):
-                apply_schema_change(self.table, schema_events[k]["schema_change"])
-
-        # all-dirty / empty-merge edge: no write job ran, so the observe
-        # metrics never fired — assert the limit with a dedicated narrow count
-        if deduped_total == 0 and events_n > 0 and dirty_n == 0:
-            dirty_n = batch.where(pred).count()
-            self.cfg.error_limit.check(dirty_n, max(events_n, 1))
-
-        return (
-            BatchReport(
-                batch_id,
-                events_n,
-                dirty_n,
-                deduped_total,
-                time.time() - t0,
-                schema_changes=len(bounds),
-                expectations=exp_counts,
-                winner_join=winner_join,
-            ),
-            dirty_by_part,
-        )
-
     def _merge_sub_batch(
         self,
         sub: DataFrame,
         dirty_pred,
-        parts: list[int],
+        track_parts: list[int],
         events_n: int,
         prior_dirty: int,
-        observe_metrics: bool,
         batch_id: str,
         watermarks: dict | None,
         final: bool,
@@ -556,8 +535,9 @@ class ReplayEngine:
         crash_before_publish: bool,
         crash_after_stage: bool,
     ) -> tuple[int, dict, dict]:
-        """Returns (winners applied — 0 when nothing merged, dirty stats
-        {part -> n, "_total": n}, the winner-join decision or {}).
+        """Returns (winners applied, dirty counts, the winner-join decision
+        or {}). The dirty counts are {"nd": total, "nd_<part>": n per tracked
+        part}, or {} when another writer had already applied the batch.
 
         ``sub`` arrives UNFILTERED (dirty rows included): the quarantine split
         happens here so the dirty counts can ride the merge job itself as
@@ -583,47 +563,17 @@ class ReplayEngine:
                 alias_of.setdefault(a, c)
         raw_mode = "tokens" not in sub.columns and "payload" in sub.columns
 
-        obs = None
-        static_dirty: dict = {}
-        if observe_metrics:
-            aggs = [F.sum(dirty_pred.cast("long")).alias("nd")]
-            track_parts = (
-                parts if len(parts) <= 64 and "part" in sub.columns else []
-            )
-            aggs += [
-                F.sum((dirty_pred & (F.col("part") == p)).cast("long")).alias(
-                    f"nd_{p}"
-                )
-                for p in track_parts
-            ]
-            obs = Observation()
-            # the observe node goes on the KEPT branch only; the winners-
-            # aggregate branch gets an observe-free twin of the same filter,
-            # so the metric node executes exactly once per write job (no
-            # double counting)
-            clean_kept = sub.observe(obs, *aggs).where(~dirty_pred)
-            clean_agg = sub.where(~dirty_pred)
-        else:
-            # foreachBatch micro-batches: Observation's listener handshake
-            # deadlocks inside the streaming clone session (verified), so the
-            # dirty counts take a dedicated narrow action up front instead
-            if "part" in sub.columns:
-                rows = (
-                    sub.where(dirty_pred)
-                    .groupBy("part")
-                    .agg(F.count("*").alias("nd"))
-                    .collect()
-                )
-                static_dirty = {
-                    f"nd_{int(r['part'])}": int(r["nd"]) for r in rows
-                }
-                static_dirty["nd"] = sum(int(r["nd"]) for r in rows)
-            else:
-                static_dirty = {"nd": sub.where(dirty_pred).count()}
-            self.cfg.error_limit.check(
-                prior_dirty + static_dirty["nd"], max(events_n, 1)
-            )
-            clean_kept = clean_agg = sub.where(~dirty_pred)
+        dirty_aggs = [F.sum(dirty_pred.cast("long")).alias("nd")] + [
+            F.sum((dirty_pred & (F.col("part") == p)).cast("long")).alias(f"nd_{p}")
+            for p in track_parts
+        ]
+        obs = Observation()
+        # the observe node goes on the KEPT branch only; the winners-
+        # aggregate branch gets an observe-free twin of the same filter,
+        # so the metric node executes exactly once per write job (no
+        # double counting)
+        clean_kept = sub.observe(obs, *dirty_aggs).where(~dirty_pred)
+        clean_agg = sub.where(~dirty_pred)
 
         # Dedup FIRST, on the narrowest projection that can still reconstruct
         # the row: key + version + op + whichever payload-bearing columns exist.
@@ -646,6 +596,28 @@ class ReplayEngine:
         src_agg = project(clean_agg)
         nb = self.table.bucket_count()
         join: dict = {}
+        metrics = {"events": events_n}
+        summary = {"batch_id": batch_id, "metrics": metrics} if final else {
+            "batch_id": batch_id
+        }
+        if final and watermarks is not None:
+            summary["watermarks"] = watermarks
+        dirty: dict = {}
+
+        def count_dirty() -> dict:
+            # the observe node's own aggregates as one narrow job, for a
+            # batch whose write job never ran the node: an all-dirty batch
+            # (adaptive execution plans the empty kept branch away, node and
+            # all) or one with no bucket to write
+            return sub.agg(*dirty_aggs).first().asDict()
+
+        def record_dirty(got: dict) -> None:
+            dirty.update(got)
+            metrics["dirty"] = int(got["nd"] or 0)
+            self.cfg.error_limit.check(
+                prior_dirty + metrics["dirty"], max(events_n, 1)
+            )
+
         cached = None  # a large batch's persisted winner aggregate
         try:
             if self._partial:
@@ -702,8 +674,6 @@ class ReplayEngine:
                         ],
                         num_partitions=nb,
                     )
-            elif self.cfg.dedup_strategy == "salted":
-                deduped = lww_dedup_salted(src, "doc_id", self.cfg.salt_buckets)
             else:
                 # JVM-side winner prune (no Python, no payload-wide shuffle), then
                 # one winners-only repartition to the table bucket count. Decode
@@ -718,7 +688,7 @@ class ReplayEngine:
                 # HashPartitioning(doc_id, nb) survives through it and the final
                 # projections: the MERGE join and the bucket-aligned write add NO
                 # further exchange — ONE winners-sized shuffle end-to-end.
-                lm, sm = getattr(self, "_version_bounds", (None, None))
+                lm, sm = self._version_bounds
                 versions = winner_versions(src_agg, "doc_id", lsn_max=lm, seq_max=sm)
                 limit = self.cfg.broadcast_winners_max_keys
                 if events_n <= limit:
@@ -759,7 +729,6 @@ class ReplayEngine:
                     )
                     if raw_mode:
                         kept = decode_proj(kept)
-                        raw_mode = False
                     deduped = kept.repartition(nb, F.col("doc_id")).dropDuplicates(
                         ["doc_id"]
                     )
@@ -776,9 +745,6 @@ class ReplayEngine:
                     deduped = kept.dropDuplicates(["doc_id"])
                     if raw_mode:
                         deduped = decode_proj(deduped)
-                        raw_mode = False
-            if raw_mode:
-                deduped = parse_events(deduped)
             # project up to the live table schema: evolved columns arrive either
             # directly, via the semi-structured after-image map, or null-filled
             out_cols = []
@@ -810,65 +776,17 @@ class ReplayEngine:
                 "seq_no",
                 *(["_rv_lsn", "_rv_seq"] if self._partial else []),
             )
-            wobs = None
-            if observe_metrics:
-                # exact winner count riding the SAME write job (observe node on
-                # the collapsed changeset — no extra action): the report's
-                # deduped_keys and the snapshot's metrics.winners. Skipped in
-                # streaming mode with the dirty observation (same deadlock).
-                from pyspark.sql import Observation
-
-                wobs = Observation()
-                deduped = deduped.observe(
-                    wobs, F.count(F.lit(1)).alias("nw")
-                )
-            metrics = {"events": events_n}
-            summary = {"batch_id": batch_id, "metrics": metrics} if final else {
-                "batch_id": batch_id
-            }
-            if final and watermarks is not None:
-                summary["watermarks"] = watermarks
-            holder: dict = {}
+            # exact winner count riding the SAME write job (observe node on
+            # the collapsed changeset — no extra action): the report's
+            # deduped_keys and the snapshot's metrics.winners
+            wobs = Observation()
+            deduped = deduped.observe(wobs, F.count(F.lit(1)).alias("nw"))
 
             def pre_publish():
                 # runs after the write job, before the snapshot publishes: the
                 # observe metrics are final here
-                if wobs is not None:
-                    try:
-                        metrics["winners"] = int(dict(wobs.get).get("nw") or 0)
-                    except Exception:
-                        pass
-                if obs is None:
-                    holder.update(static_dirty)
-                    metrics["dirty"] = static_dirty.get("nd", 0)
-                    return  # limit already asserted up front in this mode
-                try:
-                    got = dict(obs.get)
-                except Exception:
-                    # the observe node never materialized: when EVERY row of the
-                    # batch is dirty (e.g. a no-fix quarantine requeue) the
-                    # kept-branch subtree collapses to an empty relation and the
-                    # write job runs without it — Observation.get then fails
-                    # JVM-side. Fall back to one narrow dirty count (the batch is
-                    # fully dirty in exactly the case this triggers, so the scan
-                    # is the quarantine path's own cost, not a second data pass).
-                    got = {}
-                if got.get("nd") is None:
-                    if "part" in sub.columns:
-                        rows = (
-                            sub.where(dirty_pred)
-                            .groupBy("part")
-                            .agg(F.count("*").alias("nd"))
-                            .collect()
-                        )
-                        got = {f"nd_{int(r['part'])}": int(r["nd"]) for r in rows}
-                        got["nd"] = sum(int(r["nd"]) for r in rows)
-                    else:
-                        got = {"nd": sub.where(dirty_pred).count()}
-                holder.update(got)
-                nd = int(got.get("nd") or 0)
-                metrics["dirty"] = nd
-                self.cfg.error_limit.check(prior_dirty + nd, max(events_n, 1))
+                metrics["winners"] = int(_observed(wobs).get("nw") or 0)
+                record_dirty(_observed(obs) or count_dirty())
 
             wap = self.cfg.wap_audit is not None
             if self.cfg.merge_mode == "mor":
@@ -882,7 +800,7 @@ class ReplayEngine:
                     bucket_aligned=True,
                     crash_before_publish=crash_before_publish and final,
                     crash_after_stage=crash_after_stage and final,
-                    timings=getattr(self, "_phase_timings", None),
+                    timings=self._phase_timings,
                     pre_publish_check=pre_publish,
                     publish=not wap,
                 )
@@ -894,7 +812,7 @@ class ReplayEngine:
                     affected_buckets=affected_buckets,
                     crash_before_publish=crash_before_publish and final,
                     crash_after_stage=crash_after_stage and final,
-                    timings=getattr(self, "_phase_timings", None),
+                    timings=self._phase_timings,
                     pre_publish_check=pre_publish,
                     publish=not wap,
                     partial_update=self._partial,
@@ -903,25 +821,25 @@ class ReplayEngine:
         finally:
             if cached is not None:
                 cached.unpersist()
+        if snap is None:
+            # no bucket to write, so the write job never ran
+            if events_n > 0:
+                record_dirty(count_dirty())
+            if final and watermarks is not None:
+                # nothing merged but the watermark still advances: commit a
+                # data-less snapshot carrying it
+                self.table.commit([], replace_buckets=None, summary_update=summary)
+            return 0, dirty, join
         # write-audit-publish gate. A merge that found the batch already
         # applied returns the CURRENT snapshot (version == pointer) — nothing
         # staged, nothing to audit.
-        if (
-            snap is not None
-            and wap
-            and snap.version != self.table.current_version()
-        ):
+        if wap and snap.version != self.table.current_version():
             if self.cfg.wap_audit(self.table, snap):
                 self.table.publish_staged(snap.version)
             else:
                 self.table.drop_staged(snap.version)
                 raise AuditRejected(f"batch {batch_id} vetoed by wap_audit")
-        if (
-            self.cfg.merge_mode == "mor"
-            and snap is not None
-            and final
-            and self.cfg.mor_compact_after
-        ):
+        if self.cfg.merge_mode == "mor" and final and self.cfg.mor_compact_after:
             from ..lake.maintain import compact, delta_depths
 
             # INCREMENTAL: fold only the buckets whose delta depth
@@ -938,23 +856,7 @@ class ReplayEngine:
                 t_c = time.time()
                 compact(self.table, buckets=sorted(over))
                 self._phase_timings["compact"] = round(time.time() - t_c, 3)
-        if snap is None and final and watermarks is not None:
-            # nothing to merge but the watermark still advances (all-dirty or
-            # empty range): commit a data-less snapshot carrying it
-            self.table.commit([], replace_buckets=None, summary_update=summary)
-        if not holder and obs is None:
-            holder.update(static_dirty)  # merge never ran (empty/all-dirty)
-        dstats: dict = {}
-        if holder:
-            dstats["_total"] = int(holder.get("nd") or 0)
-            for key, v in holder.items():
-                if key.startswith("nd_"):
-                    dstats[int(key[3:])] = int(v or 0)
-        if snap is None:
-            return (0, dstats, join)
-        # the observe() winner count pre_publish recorded; 1 = applied but
-        # uncounted (streaming, or a merge that found the batch applied)
-        return (max(metrics.get("winners", 1), 1), dstats, join)
+        return metrics.get("winners", 0), dirty, join
 
     # ---------- full replay ----------
     def replay(

@@ -70,13 +70,19 @@ def stream_replay(
     stream = reader.parquet(source_dir)
 
     def apply(batch_df, batch_id: int):
-        # observe_metrics=False: Observation.get deadlocks inside a
-        # foreachBatch callback (the micro-batch runs on a cloned session
-        # whose listener events never reach the Observation — verified);
-        # dirty stats take a dedicated count per micro-batch here instead
-        engine.apply_batch(
-            batch_df, batch_id=f"stream:{batch_id}", observe_metrics=False
-        )
+        # Every frame of the micro-batch is built on foreachBatch's cloned
+        # session: an Observation completes only on the session of the frame
+        # it observes, and a join with a frame of the engine's session (the
+        # COW merge reads the table) would run the whole write job there,
+        # leaving Observation.get blocked forever. So each micro-batch gets
+        # its own engine over a table handle on the clone session and runs
+        # exactly the code a replay() batch runs; its lineage rows flush
+        # with it (a driver-side write).
+        s = batch_df.sparkSession
+        t = engine.table
+        eng = ReplayEngine(s, LakeTable(s, t.root, fs=t.fs, ref=t.ref), engine.cfg)
+        eng.apply_batch(batch_df, batch_id=f"stream:{batch_id}")
+        eng.lineage.flush(s)
 
     writer = (
         stream.writeStream.foreachBatch(apply)
