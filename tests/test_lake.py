@@ -192,39 +192,24 @@ def test_commit_writes_only_touched_bucket_shards(spark, tmp_path):
     assert t.read().where(F.col("doc_id") == "d7").collect()[0]["tokens"] == [9, 9]
 
 
-def test_legacy_inline_manifest_still_readable_and_migrates(spark, tmp_path):
-    """A version file written by the pre-sharding layout (inline `files`) must
-    load, and the next commit resharding-migrates it."""
+def test_version_file_without_manifests_is_refused(spark, tmp_path):
+    """The engine reads only the sharded layout: a version file without
+    manifest-shard refs (the pre-sharding inline `files` list) raises a
+    ValueError that names the file, instead of loading."""
     import json
-    import os
-
-    from tg_data_connector_spark.lake import merge_upsert
 
     root = str(tmp_path / "t")
     t = LakeTable.create(spark, root, SCHEMA, key="doc_id", n_buckets=4)
     t.append(_seed(spark, 40))
     snap = t.snapshot()
-    legacy = snap.to_json()
-    legacy.pop("manifests")
-    legacy["files"] = snap.files
-    with open(t._vpath(snap.version), "w") as f:  # simulate old writer
-        json.dump(legacy, f)
+    inline = snap.to_json()
+    inline.pop("manifests")
+    inline["files"] = snap.files
+    with open(t._vpath(snap.version), "w") as f:
+        json.dump(inline, f)
     t2 = LakeTable(spark, root)  # fresh handle, fresh cache
-    s2 = t2.snapshot()
-    assert s2.manifests == {} and len(s2.files) == len(snap.files)
-    assert t2.read().count() == 40
-    batch = spark.createDataFrame(
-        [("d3", [1], 1, "s1", "U", 5, 0)],
-        "doc_id string, tokens array<int>, n_tok int, source string, "
-        "op string, commit_lsn bigint, seq_no bigint",
-    )
-    merge_upsert(t2, batch)  # migration commit: reshards every bucket
-    s3 = t2.snapshot()
-    assert s3.manifests and "files" not in json.loads(
-        t2.fs.read_text(t2._vpath(s3.version))
-    )
-    assert t2.read().count() == 40
-    assert t2.read().where(F.col("doc_id") == "d3").collect()[0]["tokens"] == [1]
+    with pytest.raises(ValueError, match=f"v{snap.version:08d}.json"):
+        t2.snapshot()
 
 
 def test_hadoop_table_fs_primitives(spark, tmp_path):

@@ -1,6 +1,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from tg_data_connector_spark.cdc import replay as replay_mod
 from tg_data_connector_spark.cdc.dedup import lww_dedup, lww_dedup_salted
 from tg_data_connector_spark.lake import LakeTable, TableSchema, merge_upsert
 
@@ -165,7 +166,7 @@ def test_version_pack_fast_path_matches_decimal(spark):
     assert t.startswith("decimal")
 
 
-def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
+def test_replay_winner_shuffle_variant_e2e(spark, tmp_path, monkeypatch):
     """Full replay equivalence for the all-shuffle winner join (threshold 0,
     the scaling shape): every batch takes the shuffle and the final table
     matches the oracle."""
@@ -184,8 +185,8 @@ def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
     exp = oracle_final_state(seed, log_t).select(
         "doc_id", "tokens", "n_tok", "source"
     )
-    cfg = ReplayConfig(events_per_batch=3_000, parse_payload=True,
-                       broadcast_winners_max_keys=0)
+    monkeypatch.setattr(replay_mod, "BROADCAST_WINNERS_MAX_KEYS", 0)
+    cfg = ReplayConfig(events_per_batch=3_000, parse_payload=True)
     table = LakeTable.create(
         spark, str(tmp_path / "shuffle"), SCHEMA, key="doc_id", n_buckets=8
     )
@@ -197,9 +198,9 @@ def test_replay_winner_shuffle_variant_e2e(spark, tmp_path):
     assert exp.exceptAll(final).count() == 0
 
 
-def test_winner_join_auto_switch_by_batch_shape(spark, tmp_path):
+def test_winner_join_auto_switch_by_batch_shape(spark, tmp_path, monkeypatch):
     """The winner join broadcasts only when the winner count is KNOWN to be
-    within broadcast_winners_max_keys. A batch of at most that many events
+    within BROADCAST_WINNERS_MAX_KEYS. A batch of at most that many events
     broadcasts on the event bound alone, with no count job; a larger batch
     counts its persisted winner aggregate exactly, joins that same frame and
     releases it after the merge. Pinned on one log whose single batch has
@@ -221,7 +222,8 @@ def test_winner_join_auto_switch_by_batch_shape(spark, tmp_path):
             spark, str(tmp_path / tag), SCHEMA, key="doc_id", n_buckets=8
         )
         table.append(seed)
-        cfg = ReplayConfig(events_per_batch=10**9, broadcast_winners_max_keys=limit)
+        monkeypatch.setattr(replay_mod, "BROADCAST_WINNERS_MAX_KEYS", limit)
+        cfg = ReplayConfig(events_per_batch=10**9)
         eng = ReplayEngine(spark, table, cfg)
         [rep] = eng.replay(log, run_id=tag)
         assert cache.isEmpty(), tag  # the counted aggregate was released

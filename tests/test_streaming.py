@@ -102,6 +102,33 @@ def _stream_snapshots(table):
     return out
 
 
+def test_second_stream_with_its_own_checkpoint_applies(spark, tmp_path):
+    """Spark numbers micro-batches from 0 for every checkpoint. A second
+    stream into the same table, from its own source directory with its own
+    checkpoint, must still apply its rows: a micro-batch's batch id carries
+    the query id, so it cannot collide with the first stream's ids."""
+    log = gen_changelog(spark, 2000, 300, n_parts=4)
+    dir_a, dir_b = str(tmp_path / "log_a"), str(tmp_path / "log_b")
+    _stage_parts(log, dir_a, [(0, 1)])
+    _stage_parts(log, dir_b, [(2, 3)])
+    seed = gen_seed_sequences(spark, 200)
+    table = LakeTable.create(spark, str(tmp_path / "tbl"), SCHEMA, "doc_id", 8)
+    table.append(seed)
+    eng = ReplayEngine(spark, table, ReplayConfig())
+    q = stream_replay(spark, eng, dir_a, str(tmp_path / "ckpt_a"))
+    assert q.awaitTermination(300)
+    version = table.current_version()
+    q = stream_replay(spark, eng, dir_b, str(tmp_path / "ckpt_b"))
+    assert q.awaitTermination(300)
+    assert table.current_version() > version
+    assert set(table.snapshot().watermarks()) == {"0", "1", "2", "3"}
+    assert len(_stream_snapshots(table)) == 2
+    expected = oracle_final_state(seed, log)
+    got = table.read().select("doc_id", "tokens", "n_tok", "source")
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
 def test_stream_micro_batch_accounting_is_exact(spark, tmp_path, monkeypatch):
     """A micro-batch runs the replay batch's apply path, observe() metrics
     included: each micro-batch's BatchReport, its snapshot's metrics and its

@@ -114,7 +114,7 @@ def winner_filter(
     CDC-typical update ratios); ``broadcast=False`` takes a shuffled-hash join
     instead, for winner sets too large to build on the driver. The replay
     engine chooses between them from a known bound on the winner count
-    (``ReplayConfig.broadcast_winners_max_keys``).
+    (``cdc.replay.BROADCAST_WINNERS_MAX_KEYS``).
 
     ``winners``: the precomputed ``winner_versions`` of a logically identical
     frame. Callers that filter an already-shuffled df pass the aggregate of

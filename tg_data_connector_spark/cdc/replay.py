@@ -57,6 +57,33 @@ def _observed(obs) -> dict:
         return {}
 
 
+# The LWW winner prune's per-key winner versions join back to the batch
+# either as a BROADCAST (losers pruned map-side before ANY shuffle, at the
+# cost of a driver-side build that is FIXED time regardless of cluster
+# width) or SHUFFLED-HASH (every byte of work parallelizes). The engine
+# broadcasts only when the winner count is KNOWN to be <= this many keys:
+# a batch of at most this many events (its prepass count) cannot have
+# more winners; a larger batch persists its narrow winner aggregate,
+# counts it exactly and joins against that same frame. 0 would force the
+# shuffle, 2**62 the broadcast.
+#
+# The threshold is the key-count at which a driver-built broadcast of
+# (key, packed-version) rows stops paying for itself (build + per-executor
+# transfer vs shuffling the FULL pre-dedup batch). SET FROM DATA (BENCH.md
+# round-4 A/B tables: interleaved forced-variant samples at the bench's
+# 2.7M-key batch shape, BOTH lane widths): at 4 lanes the variants tie
+# within host noise (best-of 80.3 s broadcast vs 81.1 s shuffle); at 16
+# lanes broadcast wins ~2.8x (clean samples 30.2/33.0 s vs shuffle's best
+# 86.0 s, adjacent in the same windows) — the all-shuffle variant moves
+# ~1.3 GB through shuffle storage per batch where broadcast moves ~80 MB
+# once, and wide concurrent shuffle I/O is exactly what contended hosts
+# punish. So broadcast stays the default THROUGH the measured 2.7M-key
+# regime (threshold 4M); beyond it the linear growth of the driver build
+# must eventually lose to the flat shuffle cost, and batches that large
+# are better served by lowering events_per_batch anyway.
+BROADCAST_WINNERS_MAX_KEYS = 4_000_000
+
+
 @dataclass
 class ReplayConfig:
     events_per_batch: int = 1_000_000
@@ -103,31 +130,6 @@ class ReplayConfig:
     # bytes_per_batch / mean event payload size (measured on a bounded sample
     # at replay start). events_per_batch then acts as a floor of 1.
     bytes_per_batch: int | None = None
-    # the per-key winner versions join back to the batch
-    # either as a BROADCAST (losers pruned map-side before ANY shuffle, at the
-    # cost of a driver-side build that is FIXED time regardless of cluster
-    # width) or SHUFFLED-HASH (every byte of work parallelizes). The engine
-    # broadcasts only when the winner count is KNOWN to be <= this many keys:
-    # a batch of at most this many events (its prepass count) cannot have
-    # more winners; a larger batch persists its narrow winner aggregate,
-    # counts it exactly and joins against that same frame. 0 forces the
-    # shuffle, 2**62 the broadcast.
-    #
-    # The threshold is the key-count at which a driver-built broadcast of
-    # (key, packed-version) rows stops paying for itself (build + per-executor
-    # transfer vs shuffling the FULL pre-dedup batch). SET FROM DATA (BENCH.md
-    # round-4 A/B tables: interleaved forced-variant samples at the bench's
-    # 2.7M-key batch shape, BOTH lane widths): at 4 lanes the variants tie
-    # within host noise (best-of 80.3 s broadcast vs 81.1 s shuffle); at 16
-    # lanes broadcast wins ~2.8x (clean samples 30.2/33.0 s vs shuffle's best
-    # 86.0 s, adjacent in the same windows) — the all-shuffle variant moves
-    # ~1.3 GB through shuffle storage per batch where broadcast moves ~80 MB
-    # once, and wide concurrent shuffle I/O is exactly what contended hosts
-    # punish. So broadcast stays the default THROUGH the measured 2.7M-key
-    # regime (threshold 4M); beyond it the linear growth of the driver build
-    # must eventually lose to the flat shuffle cost, and batches that large
-    # are better served by lowering events_per_batch anyway.
-    broadcast_winners_max_keys: int = 4_000_000
     # Physical MERGE strategy:
     #   "cow" (default) — copy-on-write: read + full-outer-join + rewrite every
     #       bucket the batch touches (lake/merge.merge_upsert). Best read-side
@@ -690,7 +692,7 @@ class ReplayEngine:
                 # further exchange — ONE winners-sized shuffle end-to-end.
                 lm, sm = self._version_bounds
                 versions = winner_versions(src_agg, "doc_id", lsn_max=lm, seq_max=sm)
-                limit = self.cfg.broadcast_winners_max_keys
+                limit = BROADCAST_WINNERS_MAX_KEYS
                 if events_n <= limit:
                     # a batch never has more winners than events: the
                     # prepass count already bounds the winner set

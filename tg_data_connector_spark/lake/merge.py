@@ -42,24 +42,13 @@ from .table import (
 OP_COL = "op"
 
 
-def _files_by_bucket(snap: Snapshot) -> dict[int, frozenset]:
-    out: dict[int, set] = {}
-    for f in snap.files:
-        out.setdefault(int(f["bucket"]), set()).add(f["path"])
-    return {b: frozenset(s) for b, s in out.items()}
-
-
 def _changed_buckets(a: Snapshot, b: Snapshot) -> set[int]:
     """Buckets whose file set differs between two snapshots — what a
     CONCURRENT writer touched between our load and our publish attempt.
-    Compares manifest-shard refs when both snapshots are sharded (O(buckets),
-    no file-list walk); falls back to per-bucket file-path sets across the
-    legacy inline layout / migration boundary."""
-    if a.manifests and b.manifests:
-        keys = set(a.manifests) | set(b.manifests)
-        return {int(k) for k in keys if a.manifests.get(k) != b.manifests.get(k)}
-    fa, fb = _files_by_bucket(a), _files_by_bucket(b)
-    return {k for k in set(fa) | set(fb) if fa.get(k) != fb.get(k)}
+    Compares manifest-shard refs (O(buckets), no file-list walk); a bucket
+    with no shard ref has no files."""
+    keys = set(a.manifests) | set(b.manifests)
+    return {int(k) for k in keys if a.manifests.get(k) != b.manifests.get(k)}
 
 
 def merge_upsert(

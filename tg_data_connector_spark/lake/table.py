@@ -241,6 +241,33 @@ def _resolve_source_name(
     return cur
 
 
+def column_plan(
+    fields: list[tuple[str, str]], target_sid: int, file_sid: int, schemas: dict
+) -> list[tuple[str, str | None, str]]:
+    """How a file written under schema ``file_sid`` aligns to the target
+    ``fields`` of schema ``target_sid``: one ``(target, name in the file or
+    None, type)`` per target column. The name walks the rename records back
+    (chained renames compose); None = the column was added after the file
+    was written, read as NULL. A file NEWER than the target (only a stream's
+    schema, pinned at start, can be older than its files) that lacks the
+    column had it renamed or dropped after the pin: that raises."""
+    written = dict(TableSchema.from_json(schemas[str(file_sid)]).fields)
+    out = []
+    for name, typ in fields:
+        src = _resolve_source_name(name, target_sid, file_sid, schemas)
+        if src in written:
+            out.append((name, src, typ))
+        elif int(file_sid) <= int(target_sid):
+            out.append((name, None, typ))
+        else:
+            raise RuntimeError(
+                f"lake_cdf: column {name!r} was renamed or dropped after "
+                "this stream started (stream schema is pinned at start); "
+                "restart the stream to pick up the new schema"
+            )
+    return out
+
+
 def historical_names(name: str, target_sid: int, schemas: dict) -> list[str]:
     """Every name the column ``name`` has carried, newest first: the full
     rename chain walked back from ``target_sid`` to schema 1. Used by the
@@ -747,19 +774,19 @@ class LakeTable:
         hit = self._snap_cache.get(v)
         if hit is not None:
             return hit
-        d = json.loads(self.fs.read_text(self._vpath(v)))
-        manifests = d.get("manifests")
-        if manifests is None:
-            files = d["files"]  # legacy inline layout (pre-sharding version file)
-            manifests = {}
-        else:
-            files = []
-            for b in sorted(manifests, key=int):
-                files.extend(
-                    json.loads(
-                        self.fs.read_text(os.path.join(self.root, manifests[b]))
-                    )
-                )
+        path = self._vpath(v)
+        d = json.loads(self.fs.read_text(path))
+        if "manifests" not in d:
+            raise ValueError(
+                f"version file {path} has no manifest-shard refs "
+                "('manifests'); this engine reads only the sharded layout"
+            )
+        manifests = d["manifests"]
+        files = []
+        for b in sorted(manifests, key=int):
+            files.extend(
+                json.loads(self.fs.read_text(os.path.join(self.root, manifests[b])))
+            )
         snap = Snapshot(
             version=d["version"],
             parent=d["parent"],
@@ -1066,19 +1093,16 @@ class LakeTable:
         files: list[dict],
         schemas: dict,
         target: TableSchema,
-        target_sid: int | None = None,
+        target_sid: int,
         extra_cols: "list[tuple[str, str]] | None" = None,
     ) -> DataFrame | None:
         """Read a list of manifest file entries, each with its write-time
-        schema (no inference), aligned (cast / null-fill / rename-resolve)
-        up to ``target``, lineage columns included. None for an empty list.
+        schema (no inference), aligned to ``target`` (schema id
+        ``target_sid``) by ``column_plan`` — rename-resolve, cast, null-fill
+        — lineage columns included. None for an empty list.
         No tombstone filter and no delta resolution — callers layer those.
         The entries are the file list: ``read_parquet_files`` keeps Spark's
         re-listing of them on the driver, so no listing job runs.
-
-        ``target_sid``: the schema id ``target`` corresponds to — needed to
-        walk rename records back to each file's write-time name (omitted =
-        no rename resolution, the pre-rename behavior).
 
         ``extra_cols``: additional (name, type) columns to surface (the
         columnwise delta files' reset-version pair); files without them
@@ -1097,25 +1121,77 @@ class LakeTable:
             wschema = TableSchema.from_json(schemas[str(sid)])
             read_schema = TableSchema(wschema.fields + lineage)
             df = read_parquet_files(self.spark, read_schema.ddl(), paths)
-            cols = []
-            have = dict(wschema.fields)
-            for name, typ in target.fields:
-                src = (
-                    _resolve_source_name(name, target_sid, sid, schemas)
-                    if target_sid is not None
-                    else name
+            plan = column_plan(target.fields, target_sid, sid, schemas)
+            plan += [(name, name, typ) for name, typ in lineage]
+            parts.append(
+                df.select(
+                    [
+                        (F.col(src) if src is not None else F.lit(None))
+                        .cast(typ)
+                        .alias(name)
+                        for name, src, typ in plan
+                    ]
                 )
-                if src in have:
-                    cols.append(F.col(src).cast(typ).alias(name))
-                else:
-                    cols.append(F.lit(None).cast(typ).alias(name))
-            for name, typ in lineage:
-                cols.append(F.col(name).cast(typ).alias(name))
-            parts.append(df.select(cols))
+            )
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _commits_after(self, base: int, head: int) -> list[Snapshot]:
+        """The commits on ``head``'s parent chain after ``base``, oldest
+        first. Raises when ``base`` is not an ancestor of ``head``."""
+        chain: list[Snapshot] = []
+        v: int | None = head
+        while v is not None and v > base:
+            s = self.snapshot(v)
+            chain.append(s)
+            v = s.parent
+        if v != base:
+            raise ValueError(f"version {base} is not an ancestor of {head}")
+        chain.reverse()
+        return chain
+
+    def change_plan(
+        self, from_version: int, to_version: int
+    ) -> list[tuple[Snapshot, list[dict], list[dict]]]:
+        """The change feed's files: one ``(snapshot, new_files,
+        parent_files)`` per commit after ``from_version`` up to and including
+        ``to_version`` that changed rows, oldest first. ``changes()`` and the
+        ``lake_cdf`` stream both read it.
+
+        ``new_files`` are the files the commit added. ``parent_files`` is
+        empty for a merge-on-read delta commit (its new files ARE the
+        change set); for a copy-on-write rewrite or a bulk append it holds
+        the parent's files in the touched buckets, and a reader drops the new
+        rows whose (key, _lsn, _seq) they hold. A rewrite carries a key's
+        parent winner or a newer version, never a losing one, so the raw
+        parent files serve as well as the parent's resolved view.
+        Compaction and rebucket commits (summary ``compaction``) are
+        physical rewrites and are skipped. A columnwise table raises: its
+        delta rows are partial images, which a downstream LWW apply would
+        read as "NULL = overwrite"."""
+        if self.meta().get("resolution", "lww") != "lww":
+            raise ValueError(
+                "the change feed of a columnwise table (resolution "
+                f"{self.meta()['resolution']!r}) holds partial images; read "
+                "its resolved full images with LakeTable.changes()"
+            )
+        plan = []
+        for s in self._commits_after(from_version, to_version):
+            if s.summary.get("compaction"):
+                continue
+            parent = self.snapshot(s.parent).files if s.parent is not None else []
+            parent_paths = {f["path"] for f in parent}
+            new_files = [f for f in s.files if f["path"] not in parent_paths]
+            if not new_files:
+                continue
+            parent_files = []
+            if not all(f.get("kind") == "delta" for f in new_files):
+                touched = {f["bucket"] for f in new_files}
+                parent_files = [f for f in parent if f["bucket"] in touched]
+            plan.append((s, new_files, parent_files))
+        return plan
 
     def changes(
         self, from_version: int, to_version: int | None = None
@@ -1131,37 +1207,28 @@ class LakeTable:
         Output: table columns + lineage (``_lsn``/``_seq``/``_deleted``) +
         ``_commit_version``, one row per (commit, key) the commit changed.
 
-        Cost model: merge-on-read delta commits are read VERBATIM (their new
-        files ARE the change set — O(changes), the CDC-scale path); COW merge
-        commits are DIFFED against their parent (anti-join of rewritten
-        buckets on (key, version) — O(touched buckets) per commit, exact);
-        compaction commits are skipped (no logical change, flagged in the
-        snapshot summary).
+        The files come from ``change_plan``, which the ``lake_cdf`` stream
+        reads too: delta commits VERBATIM (O(changes)), a COW commit's new
+        files anti-joined on (key, _lsn, _seq) against its parent files
+        (O(touched buckets) per commit), compactions skipped. A columnwise
+        table (resolution ``partial`` / ``aggregate``) emits the NET resolved
+        diff between the two snapshots instead: full images, one
+        pseudo-commit at ``to_version``.
         """
         to_v = self.current_version() if to_version is None else to_version
-        chain: list[Snapshot] = []
-        v: int | None = to_v
-        while v is not None and v > from_version:
-            s = self.snapshot(v)
-            chain.append(s)
-            v = s.parent
-        if v != from_version:
-            raise ValueError(
-                f"version {from_version} is not an ancestor of {to_v}"
-            )
-        chain.reverse()
         to_snap = self.snapshot(to_v)
-        if chain and self.meta().get("resolution", "lww") != "lww":
-            if all(s.summary.get("compaction") for s in chain):
+        empty = self.read(  # no bucket, no file: the output schema only
+            snapshot=to_snap, buckets=[], with_lineage=True
+        ).withColumn("_commit_version", F.lit(to_v))
+        if self.meta().get("resolution", "lww") != "lww":
+            if all(
+                s.summary.get("compaction")
+                for s in self._commits_after(from_version, to_v)
+            ):
                 # every commit in the window is a compaction — no logical
-                # change by definition (the lww path below skips them one by
-                # one); short-circuit instead of paying two full resolved
-                # scans + exceptAll for a provably empty diff
-                return (
-                    self.read(snapshot=to_snap, with_lineage=True)
-                    .limit(0)
-                    .withColumn("_commit_version", F.lit(to_v))
-                )
+                # change by definition; short-circuit instead of paying two
+                # full resolved scans + exceptAll for a provably empty diff
+                return empty
             # COLUMNWISE merge engines: delta rows are PARTIAL images — a
             # downstream LWW consumer replaying them verbatim would turn
             # "NULL = unchanged" into "NULL = overwrite". Emit the NET
@@ -1193,46 +1260,23 @@ class LakeTable:
             )
         target = to_snap.schema()
         key = self.meta()["key"]
-        outs = []
-        for s in chain:
-            if s.summary.get("compaction"):
-                continue  # physical rewrite, no logical change
-            parent_paths = (
-                {f["path"] for f in self.snapshot(s.parent).files}
-                if s.parent is not None
-                else set()
-            )
-            new_files = [f for f in s.files if f["path"] not in parent_paths]
-            if not new_files:
-                continue
+
+        def read(files):
             # to_snap.schemas: the accumulated superset, so rename records
-            # registered AFTER this intermediate commit still resolve
-            df = self._read_file_entries(
-                new_files, to_snap.schemas, target, target_sid=to_snap.schema_id
+            # registered AFTER an intermediate commit still resolve
+            return self._read_file_entries(
+                files, to_snap.schemas, target, to_snap.schema_id
             )
-            if not all(f.get("kind") == "delta" for f in new_files):
-                # COW rewrite (or bulk append): keep only rows whose (key,
-                # version) is NOT in the parent's view of the same buckets —
-                # the rows this commit logically changed
-                bks = sorted({f["bucket"] for f in new_files})
-                if s.parent is not None and parent_paths:
-                    prev = self.read(
-                        snapshot=self.snapshot(s.parent),
-                        buckets=bks,
-                        with_lineage=True,
-                    ).select(key, LSN_COL, SEQ_COL)
-                    df = df.join(prev, [key, LSN_COL, SEQ_COL], "left_anti")
+
+        outs = []
+        for s, new_files, parent_files in self.change_plan(from_version, to_v):
+            df = read(new_files)
+            if parent_files:
+                prev = read(parent_files).select(key, LSN_COL, SEQ_COL)
+                df = df.join(prev, [key, LSN_COL, SEQ_COL], "left_anti")
             outs.append(df.withColumn("_commit_version", F.lit(s.version)))
-        if not outs:
-            lineage = [
-                (LSN_COL, "bigint"), (SEQ_COL, "bigint"), (DELETED_COL, "boolean"),
-                ("_commit_version", "int"),
-            ]
-            return self.spark.createDataFrame(
-                [], TableSchema(target.fields + lineage).ddl()
-            )
-        out = outs[0]
-        for p in outs[1:]:
+        out = empty
+        for p in outs:
             out = out.unionByName(p)
         return out
 
@@ -1474,25 +1518,11 @@ class LakeTable:
         new_by_bucket: dict[int, list[dict]] = {}
         for f in new_files:
             new_by_bucket.setdefault(int(f["bucket"]), []).append(f)
-        if parent.manifests or not parent.files:
-            manifests = dict(parent.manifests)
-            touched = set(new_by_bucket) | {
-                b for b in drop if str(b) in manifests
-            }
-            parent_of = None
-        else:
-            # legacy parent (inline file list): one-time migration — reshard
-            # every bucket this commit
-            parent_of: dict[int, list[dict]] = {}
-            for f in parent.files:
-                parent_of.setdefault(int(f["bucket"]), []).append(f)
-            manifests = {}
-            touched = set(new_by_bucket) | set(parent_of)
+        manifests = dict(parent.manifests)
+        touched = set(new_by_bucket) | {b for b in drop if str(b) in manifests}
         shard_writes = 0
         for b in sorted(touched):
-            if parent_of is not None:
-                prev = [] if b in drop else parent_of.get(b, [])
-            elif b in drop:
+            if b in drop:
                 prev = []
             else:
                 ref = manifests.get(str(b))

@@ -18,16 +18,24 @@ Architecture (why a Python data source is the right construct here):
     there is NO SparkSession there, so the reader walks snapshot/manifest
     JSON through the same metadata layout ``LakeTable`` owns (handle built
     with ``spark=None``; metadata ops never touch Spark).
-  * PARTITIONS mirror ``LakeTable.changes()`` exactly, one per (commit,
-    bucket): merge-on-read delta commits stream VERBATIM (their files ARE the
-    change set, O(changes)); copy-on-write commits ship the bucket's parent
-    file list too, and the executor anti-joins (key, _lsn, _seq) in Arrow —
+  * PARTITIONS come from ``LakeTable.change_plan``, the plan
+    ``LakeTable.changes()`` reads too, one partition per (commit, bucket):
+    merge-on-read delta commits stream VERBATIM (their files ARE the change
+    set, O(changes)); copy-on-write commits ship the bucket's parent file
+    list too, and the executor anti-joins (key, _lsn, _seq) in Arrow —
     bucket-local and exact, because both sides hash to the same bucket.
     Compaction/rebucket commits are physical rewrites and are skipped.
+    Each file's column alignment is ``lake.table.column_plan``, computed at
+    plan time.
   * READ is pyarrow-only on executors (no JVM round trips): read the parquet
-    file(s), align write-time schema -> stream schema (rename-resolve /
-    cast-widen / null-fill, the ``_read_file_entries`` rules re-expressed on
-    Arrow), filter carried-over rows, emit RecordBatches.
+    file(s), apply the column plan (rename-resolve / cast / null-fill) with
+    the Arrow types Spark's own data-source worker maps the stream schema
+    to (``to_arrow_schema``), filter carried-over rows, emit RecordBatches.
+
+A columnwise table (resolution ``partial`` / ``aggregate``) is refused when
+the stream is opened: its delta files hold partial images, which a
+downstream LWW apply would read as "NULL = overwrite". Its batch feed,
+``LakeTable.changes()``, emits resolved full images.
 
 The stream's schema is pinned at stream start (Spark streaming queries cannot
 change schema mid-query — same restriction as Delta/Iceberg streaming reads).
@@ -40,7 +48,6 @@ yields byte-identical partitions.
 from __future__ import annotations
 
 import os
-import re
 from typing import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -49,41 +56,9 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from ..lake.fs import uri_scheme
+
 _LINEAGE = [("_lsn", "bigint"), ("_seq", "bigint"), ("_deleted", "boolean")]
-_SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*:")
-
-
-def _arrow_type(ddl: str):
-    """Spark-DDL -> arrow for this table format's type vocabulary. Local
-    parser on purpose: executors and the stream-planning process have no
-    SparkSession, so ``_parse_datatype_string`` (py4j) is unavailable."""
-    import pyarrow as pa
-
-    t = ddl.strip().lower()
-    m = re.match(r"array\s*<(.+)>$", t)
-    if m:
-        return pa.list_(_arrow_type(m.group(1)))
-    m = re.match(r"decimal\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)$", t)
-    if m:
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    prim = {
-        "string": pa.string(),
-        "int": pa.int32(),
-        "integer": pa.int32(),
-        "bigint": pa.int64(),
-        "long": pa.int64(),
-        "smallint": pa.int16(),
-        "tinyint": pa.int8(),
-        "boolean": pa.bool_(),
-        "double": pa.float64(),
-        "float": pa.float32(),
-        "binary": pa.binary(),
-        "date": pa.date32(),
-        "timestamp": pa.timestamp("us"),
-    }
-    if t in prim:
-        return prim[t]
-    raise ValueError(f"lake_cdf: unsupported column type {ddl!r}")
 
 
 class _ArrowMetaFS:
@@ -104,14 +79,14 @@ def _meta_table(root: str):
     reads go through the FS seam and never touch Spark."""
     from ..lake.table import LakeTable
 
-    fs = _ArrowMetaFS() if _SCHEME_RE.match(root) else None
+    fs = _ArrowMetaFS() if uri_scheme(root) else None
     return LakeTable(None, root, fs=fs)
 
 
 def _read_parquet(path: str, columns: list[str]):
     import pyarrow.parquet as pq
 
-    if _SCHEME_RE.match(path):
+    if uri_scheme(path):
         import pyarrow.fs as pafs
 
         fs, p = pafs.FileSystem.from_uri(path)
@@ -125,7 +100,7 @@ class LakeCDFPartition(InputPartition):
 
 
 class LakeCDFStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema):
         self.root = options.get("path") or options.get("root")
         if not self.root:
             raise ValueError("lake_cdf requires option 'path' (table root)")
@@ -138,6 +113,7 @@ class LakeCDFStreamReader(DataSourceStreamReader):
         self._target_sid = snap.schema_id
         self._fields = list(snap.schema().fields)
         self._key = t.meta()["key"]
+        self._schema = schema  # the StructType Spark reads the batches as
 
     # the reader is pickled to executors for read(); the table handle is
     # driver-process state (metadata cache) and is rebuilt on demand
@@ -157,93 +133,46 @@ class LakeCDFStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         return {"version": self._tbl().current_version()}
 
-    def _colmap(self, file_entry: dict, schemas: dict) -> list[list]:
-        """Per-file alignment plan [(target, source|None, target_type)];
-        computed at PLAN time so executors do zero metadata I/O."""
-        from ..lake.table import TableSchema, _resolve_source_name
-
-        wfields = dict(
-            TableSchema.from_json(schemas[str(file_entry["schema_id"])]).fields
-        )
-        out = []
-        for name, typ in self._fields:
-            src = _resolve_source_name(
-                name, self._target_sid, file_entry["schema_id"], schemas
-            )
-            if src in wfields:
-                out.append([name, src, typ])
-            elif int(file_entry["schema_id"]) <= int(self._target_sid):
-                out.append([name, None, typ])  # added after this file: null-fill
-            else:
-                raise RuntimeError(
-                    f"lake_cdf: column {name!r} was renamed or dropped after "
-                    "this stream started (stream schema is pinned at start); "
-                    "restart the stream to pick up the new schema"
-                )
-        return out
-
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        from ..lake.table import column_plan
+
         t = self._tbl()
-        chain = []
-        v = end["version"]
-        while v is not None and v > start["version"]:
-            s = t.snapshot(v)
-            chain.append(s)
-            v = s.parent
-        if v != start["version"]:
+        try:
+            plan = t.change_plan(start["version"], end["version"])
+        except ValueError as e:
             raise ValueError(
-                f"version {start['version']} is not an ancestor of "
-                f"{end['version']} (rolled back under a running stream?)"
+                f"{e} (rolled back under a running stream?)"
+            ) from None
+        # the end snapshot's schemas: the accumulated superset, so rename
+        # records registered after an intermediate commit still resolve
+        schemas = t.snapshot(end["version"]).schemas
+        key_at = [n for n, _ in self._fields].index(self._key)
+
+        def cols(f: dict) -> list:
+            return column_plan(
+                self._fields, self._target_sid, f["schema_id"], schemas
             )
-        chain.reverse()
+
+        def path(f: dict) -> str:
+            return os.path.join(self.root, f["path"])
+
         parts: list[InputPartition] = []
-        for s in chain:
-            if s.summary.get("compaction"):
-                continue  # physical rewrite, no logical change
-            parent_entries: dict[str, dict] = {}
-            if s.parent is not None:
-                parent_entries = {
-                    f["path"]: f for f in t.snapshot(s.parent).files
-                }
-            new = [f for f in s.files if f["path"] not in parent_entries]
-            if not new:
-                continue
-            diff = not all(f.get("kind") == "delta" for f in new)
-            by_bucket: dict[int, list[dict]] = {}
-            for f in new:
-                by_bucket.setdefault(f["bucket"], []).append(f)
-            for b, fl in sorted(by_bucket.items()):
-                parents = []
-                if diff and parent_entries:
-                    for pf in parent_entries.values():
-                        if pf["bucket"] != b:
-                            continue
-                        parents.append(
-                            {
-                                "path": os.path.join(self.root, pf["path"]),
-                                "key": (
-                                    self._colmap(pf, s.schemas)[
-                                        [n for n, _ in self._fields].index(
-                                            self._key
-                                        )
-                                    ][1]
-                                ),
-                            }
-                        )
+        for s, new_files, parent_files in plan:
+            for b in sorted({f["bucket"] for f in new_files}):
                 parts.append(
                     LakeCDFPartition(
                         {
                             "version": s.version,
-                            "key": self._key,
-                            "fields": self._fields,
                             "new": [
-                                {
-                                    "path": os.path.join(self.root, f["path"]),
-                                    "cols": self._colmap(f, s.schemas),
-                                }
-                                for f in fl
+                                {"path": path(f), "cols": cols(f)}
+                                for f in new_files
+                                if f["bucket"] == b
                             ],
-                            "parent": parents,
+                            "parent": [
+                                {"path": path(f), "key": cols(f)[key_at][1]}
+                                for f in parent_files
+                                if f["bucket"] == b
+                            ],
                         }
                     )
                 )
@@ -252,72 +181,57 @@ class LakeCDFStreamReader(DataSourceStreamReader):
     def read(self, partition: LakeCDFPartition) -> Iterator:
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         val = partition.value
+        # the Arrow types Spark's data-source worker validates batches against
+        arrow = to_arrow_schema(self._schema)
 
         def align(spec: dict):
-            need = sorted(
-                {s for _, s, _ in spec["cols"] if s} | {n for n, _ in _LINEAGE}
+            cols = list(spec["cols"]) + [(c, c, t) for c, t in _LINEAGE]
+            raw = _read_parquet(spec["path"], sorted({s for _, s, _ in cols if s}))
+            return pa.table(
+                [
+                    pc.cast(raw[src].combine_chunks(), arrow.field(tgt).type)
+                    if src is not None
+                    else pa.nulls(raw.num_rows, arrow.field(tgt).type)
+                    for tgt, src, _ in cols
+                ],
+                names=[tgt for tgt, _, _ in cols],
             )
-            raw = _read_parquet(spec["path"], need)
-            n = raw.num_rows
-            arrays, names = [], []
-            for tgt, src, typ in list(spec["cols"]) + [
-                (c, c, t) for c, t in _LINEAGE
-            ]:
-                at = _arrow_type(typ)
-                if src is not None:
-                    arrays.append(pc.cast(raw[src].combine_chunks(), at))
-                else:
-                    arrays.append(pa.nulls(n, at))
-                names.append(tgt)
-            return pa.table(arrays, names=names)
 
         out = pa.concat_tables([align(s) for s in val["new"]])
 
-        def composite(tbl, key_name):
+        def composite(tbl, key: str):
             return pc.binary_join_element_wise(
-                pc.cast(tbl[key_name].combine_chunks(), pa.string()),
-                pc.cast(tbl["_lsn"].combine_chunks(), pa.string()),
-                pc.cast(tbl["_seq"].combine_chunks(), pa.string()),
+                *[
+                    pc.cast(tbl[c].combine_chunks(), pa.string())
+                    for c in (key, "_lsn", "_seq")
+                ],
                 "\x00",
             )
 
         if val["parent"] and out.num_rows:
-            # keys stay Arrow end-to-end: concat the parent composite-key
-            # arrays and let is_in hash them (it dedups internally) — no
-            # per-key Python set materialization on the batch path.
-            seen_arrs: list = []
-            for pspec in val["parent"]:
-                praw = _read_parquet(
-                    pspec["path"], [pspec["key"], "_lsn", "_seq"]
-                )
-                if pspec["key"] != val["key"]:
-                    # select() fixes column order (read_table returns file
-                    # order, not request order) before the positional rename
-                    praw = praw.select(
-                        [pspec["key"], "_lsn", "_seq"]
-                    ).rename_columns([val["key"], "_lsn", "_seq"])
-                arr = composite(praw, val["key"])
-                if isinstance(arr, pa.ChunkedArray):
-                    arr = arr.combine_chunks()
-                seen_arrs.append(arr)
-            value_set = (
-                pa.concat_arrays(seen_arrs) if seen_arrs else None
-            )
-            if value_set is not None and len(value_set):
-                mask = pc.invert(
-                    pc.is_in(
-                        composite(out, val["key"]), value_set=value_set
+            # keys stay Arrow end-to-end: is_in hashes the parent composite
+            # keys (it dedups internally) — no per-key Python set
+            seen = pa.concat_arrays(
+                [
+                    composite(
+                        _read_parquet(p["path"], [p["key"], "_lsn", "_seq"]),
+                        p["key"],
                     )
-                )
-                out = out.filter(mask)
+                    for p in val["parent"]
+                ]
+            )
+            out = out.filter(
+                pc.invert(pc.is_in(composite(out, self._key), value_set=seen))
+            )
         if not out.num_rows:
             return iter(())
         out = out.append_column(
             "_commit_version",
-            pa.chunked_array(
-                [pa.array([val["version"]] * out.num_rows, pa.int32())]
+            pa.array(
+                [val["version"]] * out.num_rows, arrow.field("_commit_version").type
             ),
         )
         return iter(out.to_batches())
@@ -335,7 +249,8 @@ class LakeChangeFeedDataSource(DataSource):
 
     Options: ``path`` (table root, required), ``startingVersion`` (stream
     changes committed AFTER this version; default = the current version at
-    stream start, i.e. only new commits)."""
+    stream start, i.e. only new commits). A columnwise table is refused
+    here, when the stream is opened; read it with ``LakeTable.changes()``."""
 
     @classmethod
     def name(cls) -> str:
@@ -345,12 +260,16 @@ class LakeChangeFeedDataSource(DataSource):
         root = self.options.get("path") or self.options.get("root")
         if not root:
             raise ValueError("lake_cdf requires option 'path' (table root)")
-        fields = list(_meta_table(root).snapshot().schema().fields)
+        table = _meta_table(root)
+        snap = table.snapshot()
+        # an empty plan for any lww table; raises for a columnwise one
+        table.change_plan(snap.version, snap.version)
+        fields = list(snap.schema().fields)
         fields += _LINEAGE + [("_commit_version", "int")]
         return ", ".join(f"{n} {t}" for n, t in fields)
 
     def streamReader(self, schema) -> LakeCDFStreamReader:
-        return LakeCDFStreamReader(dict(self.options))
+        return LakeCDFStreamReader(dict(self.options), schema)
 
 
 def read_change_stream(spark, root: str, starting_version: int | None = None):

@@ -8,7 +8,10 @@ commit), so batch replay and streaming tail are the same engine with different
 drivers — and the snapshot summary watermarks make the sink idempotent even
 when Spark replays a micro-batch after a failure (foreachBatch is
 at-least-once; the snapshot's applied-batch-id check upgrades it to
-exactly-once, the same trick Delta/Iceberg streaming sinks use).
+exactly-once, the same trick Delta/Iceberg streaming sinks use). A
+micro-batch's batch id is ``stream:<query id>:<micro-batch id>``: Spark
+numbers micro-batches from 0 per checkpoint, and the query id, stored in
+the checkpoint, tells two streams into the same table apart.
 
 Rate throttling (the reference's ``Channel.statPush`` byte/record limits,
 ``Channel.java:176-239``) maps to ``maxFilesPerTrigger`` here.
@@ -44,9 +47,13 @@ def stream_replay(
     """Tail a parquet-file changelog directory as a stream and apply each
     micro-batch through the engine. Returns the StreamingQuery.
 
-    Exactly-once: Spark's checkpoint dedups source files; independently, the
-    snapshot summary's batch-id check makes re-delivered micro-batches no-ops,
-    so wiping the Spark checkpoint and re-running converges to the same table.
+    Exactly-once: Spark's checkpoint dedups source files, and a micro-batch
+    re-delivered under the same checkpoint (same query id, same micro-batch
+    id) is skipped by the snapshot's applied-batch-id check. A wiped
+    checkpoint starts a new query id, so its micro-batches apply again; each
+    re-applied event is a version the table already holds, which LWW (or a
+    columnwise table's read-time fold, which collapses (key, version)
+    duplicates) absorbs. The table ends in the same state.
     """
     if getattr(engine, "_partial", False) and engine.cfg.merge_mode != "mor":
         # a file-split micro-batch can interleave version ranges with its
@@ -81,7 +88,8 @@ def stream_replay(
         s = batch_df.sparkSession
         t = engine.table
         eng = ReplayEngine(s, LakeTable(s, t.root, fs=t.fs, ref=t.ref), engine.cfg)
-        eng.apply_batch(batch_df, batch_id=f"stream:{batch_id}")
+        query_id = s.sparkContext.getLocalProperty("sql.streaming.queryId")
+        eng.apply_batch(batch_df, batch_id=f"stream:{query_id}:{batch_id}")
         eng.lineage.flush(s)
 
     writer = (
@@ -166,7 +174,9 @@ def stream_view_maintenance(
     """Continuous materialized-view maintenance: tail ``src``'s change feed
     (the lake_cdf streaming source) and advance the aggregate view once per
     micro-batch via ``lake.mview.refresh_aggregate``. Returns the
-    StreamingQuery.
+    StreamingQuery. The lake_cdf source refuses a columnwise ``src``
+    (resolution ``partial`` / ``aggregate``), so this fails at start for
+    one; batch ``refresh_aggregate`` maintains such a view.
 
     The stream is the TRIGGER, not the data path: each callback refreshes up
     to the batch's highest ``_commit_version``, and the refresh re-derives
